@@ -1,12 +1,11 @@
-"""``batch_mix``: fixed-order registry queries through
-``__spark_entry__.queries()``, one client, closed loop.
+"""The batch mix of the traced run: fixed-order registry queries through
+``__spark_entry__.queries()``, one client.
 
-The tables are generated from the seed in the sf test tables' star-schema shape
-(``gen.batch_tables``). The set-up pass (cold) warms the session; every
-later pass is timed per query. Results are collected (every result is at
-most a few thousand rows), so each pass is checked: the first timed pass
-against the query's DuckDB oracle with ``tools/check_oracle.py``'s
-canonical value hash, every later pass against the first.
+The tables are generated from the seed in the sf test tables' star-schema
+shape (``gen.batch_tables``). A cold pass warms the session, then one pass
+is timed per query and attributed in the event log. Results are collected
+(every result is at most a few thousand rows) and checked against each
+query's DuckDB oracle with ``tools/check_oracle.py``'s canonical value hash.
 """
 
 from __future__ import annotations
@@ -65,44 +64,31 @@ def _pass(run, spark, queries, tables: str, label: str | None):
     return out
 
 
-def run_batch(run) -> None:
+def trace_mix(run, spark) -> None:
+    """Per-query layers on *spark*: a cold pass, then one timed pass
+    keyed ``p1:<query>`` in the event log; both checked against the
+    oracle. Then the same on a ``local[1]`` session (``scaling.*``)."""
     import __spark_entry__ as entry
 
     tables = os.path.join(run.work, "tables")
     gen.batch_tables(run.seed, tables, SCALE)
     oracle = _oracle_hashes(run, tables)
     queries = entry.queries()
-    passes = []
-    with run.rss():
-        t0 = time.time()
-        spark = run.session()
-        launch = time.time() - t0
-        t0 = time.time()
-        _pass(run, spark, queries, tables, None)
-        run.report_setup(launch, time.time() - t0)
-        deadline = time.time() + run.seconds
-        while time.time() < deadline or not passes:
-            passes.append(_pass(run, spark, queries, tables, f"p{len(passes) + 1}"))
-    first = passes[0]
+    passes = [_pass(run, spark, queries, tables, None),
+              _pass(run, spark, queries, tables, "p1")]
     for q in BATCH_QUERIES:
-        run.check(f"{q}_matches_oracle", first[q][1] == oracle[q], "value hash differs")
-        same = all(p[q][1] == first[q][1] for p in passes[1:])
-        run.check(f"{q}_repeats", same, "a later pass returned other rows")
+        bad = sum(p[q][1] != oracle[q] for p in passes)
+        run.check(f"{q}_matches_oracle", bad == 0, "value hash differs")
         run.attempted += len(passes)
-        run.failed += sum(p[q][1] != oracle[q] for p in passes)
-    # latency = one warm pass over the mix; throughput = queries per second
-    mix = [sum(p[q][0] for q in BATCH_QUERIES) for p in passes]
-    run.latency(mix)
-    run.e2e("items_per_s", len(BATCH_QUERIES) * len(mix) / sum(mix))
-    run.note(f"{len(passes)} timed passes, mix seconds " + ", ".join(f"{m:.3f}" for m in mix))
-    if run.trace:
-        for q in BATCH_QUERIES:
-            run.layer(f"queries.{q}.wall_s", first[q][0])
-        run.query_ledger({f"p1:{q}": first[q][0] * 1000 for q in BATCH_QUERIES})
-        run.scaling("scaling.batch_mix_s_local1", lambda s: _local1_mix_s(run, s, queries, tables))
+        run.failed += bad
+        run.layer(f"queries.{q}.wall_s", passes[1][q][0])
+    run.query_ledger({f"p1:{q}": passes[1][q][0] * 1000 for q in BATCH_QUERIES})
+    run.note("batch mix seconds " + ", ".join(
+        f"{sum(w for w, _ in p.values()):.3f}" for p in passes))
 
+    def local1(s):
+        # one cold and one timed pass
+        _pass(run, s, queries, tables, None)
+        return sum(w for w, _ in _pass(run, s, queries, tables, "local1").values())
 
-def _local1_mix_s(run, spark, queries, tables: str) -> float:
-    """One cold and one timed pass on a local[1] session."""
-    _pass(run, spark, queries, tables, None)
-    return sum(w for w, _ in _pass(run, spark, queries, tables, "local1").values())
+    run.scaling("scaling.batch_mix_s_local1", local1)

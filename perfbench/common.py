@@ -160,12 +160,12 @@ def _children(pid_map: dict[int, int], root: int) -> list[int]:
     return out
 
 
-def tree_hwm_bytes(root: int | None = None, exclude=()) -> dict[int, int]:
-    """pid -> VmHWM (peak resident bytes) of the engine's processes under
-    *root* (default: this process): the Python driver, its JVM and the
-    JVM's Python workers. Other descendants are skipped: a helper the JVM
-    forks (e.g. for ``chmod``) briefly reports the JVM's whole resident set
-    before it execs, and would count the JVM twice."""
+def engine_pids(root: int | None = None) -> list[int]:
+    """The engine's processes under *root* (default: this process): the
+    Python driver, its JVM and the JVM's Python workers. Other descendants
+    are skipped: a helper the JVM forks (e.g. for ``chmod``) briefly
+    reports the JVM's whole resident set before it execs, and would count
+    the JVM twice."""
     root = root or os.getpid()
     parents, comms = {}, {}
     for d in os.listdir("/proc"):
@@ -180,13 +180,17 @@ def tree_hwm_bytes(root: int | None = None, exclude=()) -> dict[int, int]:
         head, tail = stat.rsplit(")", 1)
         parents[int(d)] = int(tail.split()[1])
         comms[int(d)] = head.split("(", 1)[1]
+    return [
+        pid
+        for pid in _children(parents, root)
+        if comms[pid].startswith("python") or (comms[pid] == "java" and parents[pid] == root)
+    ]
+
+
+def tree_hwm_bytes(root: int | None = None) -> dict[int, int]:
+    """pid -> VmHWM (peak resident bytes) of every :func:`engine_pids`."""
     out = {}
-    for pid in _children(parents, root):
-        engine = comms[pid].startswith("python") or (
-            comms[pid] == "java" and parents[pid] == root
-        )
-        if pid in exclude or not engine:
-            continue
+    for pid in engine_pids(root):
         try:
             with open(f"/proc/{pid}/status") as f:
                 for line in f:
@@ -198,23 +202,34 @@ def tree_hwm_bytes(root: int | None = None, exclude=()) -> dict[int, int]:
     return out
 
 
+def reset_peaks(root: int | None = None) -> None:
+    """Reset VmHWM to the current resident size in every engine process
+    (``5`` to ``/proc/<pid>/clear_refs``), so a peak reached before, such
+    as the benchmark building its inputs and oracle, is not counted."""
+    for pid in engine_pids(root):
+        try:
+            with open(f"/proc/{pid}/clear_refs", "w") as f:
+                f.write("5")
+        except OSError:
+            continue
+
+
 class RssSampler:
     """Background thread tracking the peak memory of the process tree: at
     each sample, the summed VmHWM (the kernel's per-process peak resident
     size, so short peaks between samples still count) of every live
     process; ``peak`` is the largest such sum. Workers that have exited
-    drop out, so the figure does not grow with worker churn."""
+    drop out, so the figure does not grow with worker churn. Peaks reached
+    before the sampler starts are reset, not counted."""
 
-    def __init__(self, interval_s: float = 0.5, exclude: set[int] = frozenset()):
+    def __init__(self, interval_s: float = 0.5):
         self.interval_s = interval_s
-        #: pids the benchmark itself started (input generators)
-        self.exclude = exclude
         self.peak = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
 
     def _sample(self):
-        h = tree_hwm_bytes(exclude=self.exclude)
+        h = tree_hwm_bytes()
         self.peak = max(self.peak, sum(h.values()))
 
     def _run(self):
@@ -223,6 +238,7 @@ class RssSampler:
             self._stop.wait(self.interval_s)
 
     def __enter__(self):
+        reset_peaks()
         self._thread.start()
         return self
 

@@ -83,11 +83,6 @@ def write_probe_file(path: str, rng, start_id: int, n: int) -> np.ndarray:
     return levels
 
 
-def level_counts(levels: np.ndarray) -> dict[int, int]:
-    vals, counts = np.unique(levels, return_counts=True)
-    return {int(v): int(c) for v, c in zip(vals, counts)}
-
-
 # ---------------------------------------------------------------------------
 # Curation corpus
 # ---------------------------------------------------------------------------

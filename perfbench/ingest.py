@@ -1,12 +1,12 @@
-"""The two ingest workloads: ``--config`` ingest driven through
+"""``ingest_backlog``: ``--config`` ingest driven through
 ``streaming.pipeline.run_ingest`` over ``streaming.sources.file_lines``.
 
-- ``ingest_backlog`` (closed loop): pre-generated 100k-line files are
-  renamed into the spool two ahead of the engine and drained one file per
-  trigger, so every run sees identical epochs.
-- ``ingest_trickle`` (open loop): ``trickle.py`` runs as its own process
-  and drops a file every 100 ms at 2,000 lines/s whatever the engine does;
-  each pack is timed from when its newest line was due.
+Closed loop: pre-generated probe files are renamed into the spool ahead
+of the engine and drained one file per trigger, so every run sees identical
+epochs. Set-up is the session launch, the first (small) epoch and a fixed
+number of warm-up epochs; then every epoch started in the ``--seconds``
+window, at least ``MIN_EPOCHS``, and the files still waiting when it
+closes are measured.
 """
 
 from __future__ import annotations
@@ -15,12 +15,11 @@ import glob
 import json
 import os
 import shutil
-import subprocess
-import sys
 import time
 
 import numpy as np
 
+import batch
 import gen
 from common import (
     dir_bytes,
@@ -30,81 +29,67 @@ from common import (
     progress_layers,
 )
 
+#: lines per drained file (one epoch each)
 BACKLOG_LINES = 50_000
 BACKLOG_PACK = 1000
-#: lines in each set-up epoch's file (set-up measures start-up, not drain)
+#: lines in the set-up epoch's file (set-up measures start-up, not drain)
 SETUP_LINES = 10_000
-TRICKLE_RATE = 2000.0
-TRICKLE_INTERVAL = 0.1
-TRICKLE_PACK = 50
-#: a trickle run is invalid when any drop is written this late (s) ...
-MAX_GENERATOR_LATE_S = 0.5
-#: ... or when more than this many seconds of input are unconsumed at the
-#: end of the window
-MAX_BACKLOG_S = 2.0
+#: full epochs drained after the first and before the measurement, while
+#: the JVM is still compiling the per-row paths (they count as set-up)
+WARMUP_EPOCHS = 3
+#: measured epochs per run at least, whatever the window
+MIN_EPOCHS = 3
+#: uncommitted files kept in the spool
+AHEAD = 2
 EPOCH_TIMEOUT_S = 90
 
 
-def _start(spark, spool: str, base: str, pack_length: int, max_files: int | None):
+def _start(spark, spool: str, base: str):
+    """The ingest query over *spool*, one file per trigger."""
     from tower_parse_spark.streaming.pipeline import run_ingest
     from tower_parse_spark.streaming.sources import file_lines
 
-    lines = file_lines(spark, spool, max_files_per_trigger=max_files)
-    return run_ingest(spark, gen.probe_profile(pack_length), lines, base)
+    lines = file_lines(spark, spool, max_files_per_trigger=1)
+    return run_ingest(spark, gen.probe_profile(BACKLOG_PACK), lines, base)
 
 
-def _setup(run, spool: str, pack_length: int, max_files: int | None, before_start=None):
-    """Launch the session, run *before_start* (if any), start the query on
-    *spool* and drive it through its first epoch; set-up time covers the
-    launch and the first epoch. One set-up per run: a second and third cost
-    ~5 s and did not fit the time budget."""
+def _setup(run, spool: str):
+    """Launch the session, start the query on *spool* and drive it through
+    its first epoch; returns the session, the query, the sink base and the
+    launch time."""
     t0 = time.time()
     spark = run.session()
     launch = time.time() - t0
-    if before_start is not None:
-        before_start()
     base = os.path.join(run.work, "sink")
-    t0 = time.time()
     with run.tracer.span("stream.start"):
-        q = _start(spark, spool, base, pack_length, max_files)
+        q = _start(spark, spool, base)
     run.progress.wait_batches(q.runId, 1, EPOCH_TIMEOUT_S)
-    run.report_setup(launch, time.time() - t0)
-    return spark, q, base
+    return spark, q, base, launch
 
 
 def _source_log(checkpoint: str) -> dict[int, list[str]]:
-    """batch id -> the files the file source planned for it."""
-    out = {}
+    """batch id -> the files the file source planned for it (every tenth
+    batch the log is compacted into ``<id>.compact``, whose entries carry
+    their own batch ids)."""
+    out: dict[int, list[str]] = {}
     for path in glob.glob(os.path.join(checkpoint, "sources", "0", "*")):
         name = os.path.basename(path)
-        if name.isdigit():
+        if name.isdigit() or name.endswith(".compact"):
             with open(path) as f:
-                out[int(name)] = [
-                    json.loads(line)["path"] for line in f.read().splitlines()[1:]
-                ]
-    return out
-
-
-def _batch_timestamps(checkpoint: str) -> dict[int, float]:
-    """batch id -> batch timestamp (s), from the offset log; the packer's
-    ``time`` column carries it, so a pack's newest row names its epoch."""
-    out = {}
-    for path in glob.glob(os.path.join(checkpoint, "offsets", "*")):
-        name = os.path.basename(path)
-        if name.isdigit():
-            with open(path) as f:
-                out[int(name)] = json.loads(f.read().splitlines()[1])["batchTimestampMs"] / 1000.0
-    return out
+                for line in f.read().splitlines()[1:]:
+                    entry = json.loads(line)
+                    out.setdefault(int(entry["batchId"]), []).append(entry["path"])
+    return {b: sorted(set(files)) for b, files in out.items()}
 
 
 def _read_packs(data_dir: str):
-    """The sink as a pandas frame of (level, pack_id, id, time), read with
+    """The sink as a pandas frame of (level, pack_id, id), read with
     pyarrow (hive partitions level=/pack_id=)."""
     import pyarrow.dataset as ds
 
     table = ds.dataset(data_dir, format="parquet", partitioning="hive",
                        exclude_invalid_files=True).to_table(
-        columns=["level", "pack_id", "id", "time"])
+        columns=["level", "pack_id", "id"])
     return table.to_pandas()
 
 
@@ -182,167 +167,109 @@ def _extraction_rate(run, spark, spool: str) -> None:
 # ---------------------------------------------------------------------------
 
 
+def _trigger_start(e: dict) -> float:
+    return epoch_end(e) - e["durationMs"]["triggerExecution"] / 1000.0
+
+
+def _backlog_lines(events: list[dict], placed: dict[str, float],
+                   sizes: dict[str, int], e: dict) -> int:
+    """Lines waiting in the spool when epoch *e* started: lines of files
+    placed before its trigger started, minus lines of epochs that had
+    committed by then."""
+    start = _trigger_start(e)
+    made = sum(sizes[name] for name, t in placed.items() if t <= start)
+    done = sum(x["numInputRows"] for x in events if epoch_end(x) <= start)
+    return made - done
+
+
 def run_backlog(run) -> None:
     rng = np.random.default_rng(run.seed)
     stage = os.path.join(run.work, "stage")
     os.makedirs(stage)
-    # file 0 is the set-up epoch's small file; then enough full files for
-    # a window in which an epoch takes 1 s
-    n_files = int(run.seconds / 1.0) + 3
+    # file 0 is the set-up epoch's small file, then the warm-up files, then
+    # enough measured files for a window in which an epoch takes 1 s
+    n_measured = max(MIN_EPOCHS, run.seconds) + AHEAD
+    n_files = 1 + WARMUP_EPOCHS + n_measured
     sizes = [SETUP_LINES] + [BACKLOG_LINES] * (n_files - 1)
     firsts = [sum(sizes[:k]) for k in range(n_files)]
+    names = [f"b{k:04d}.txt" for k in range(n_files)]
     levels = [
-        gen.write_probe_file(os.path.join(stage, f"b{k:04d}.txt"), rng, firsts[k], sizes[k])
+        gen.write_probe_file(os.path.join(stage, names[k]), rng, firsts[k], sizes[k])
         for k in range(n_files)
     ]
     spool = os.path.join(run.work, "spool")
     os.makedirs(spool)
-    os.rename(os.path.join(stage, "b0000.txt"), os.path.join(spool, "b0000.txt"))
+    placed: dict[str, float] = {}
+
+    def place(k: int) -> None:
+        os.rename(os.path.join(stage, names[k]), os.path.join(spool, names[k]))
+        placed[names[k]] = time.time()
+
+    place(0)
     with run.rss():
-        spark, q, base = _setup(run, spool, BACKLOG_PACK, max_files=1)
-        placed, done = 1, 1
-        deadline = time.time() + run.seconds
-        while time.time() < deadline:
-            # keep two files waiting, so the engine never idles on input
-            while placed - done < 2 and placed < n_files:
-                name = f"b{placed:04d}.txt"
-                os.rename(os.path.join(stage, name), os.path.join(spool, name))
-                placed += 1
-            if done == placed:
+        t0 = time.time()
+        spark, q, base, launch = _setup(run, spool)
+        done, deadline = 1, None
+        while True:
+            if deadline is None and done >= 1 + WARMUP_EPOCHS:
+                # set-up: launch, first epoch and warm-up epochs
+                run.report_setup(launch, time.time() - t0 - launch)
+                deadline = time.time() + run.seconds
+            if deadline and time.time() >= deadline and done - 1 - WARMUP_EPOCHS >= MIN_EPOCHS:
+                break
+            # keep AHEAD uncommitted files in the spool, so the engine never
+            # idles on input
+            while len(placed) - done < AHEAD and len(placed) < n_files:
+                place(len(placed))
+            if done == len(placed):
                 break
             done = len(run.progress.wait_batches(q.runId, done + 1, EPOCH_TIMEOUT_S))
         q.processAllAvailable()
         q.stop()
-    # every file placed before the deadline is measured, including the
-    # (at most two) drained after it
+    # every placed file is drained; the (at most AHEAD) files waiting when
+    # the window closed are measured too
     events = epochs_with_input(q)
-    measured = events[1:]
+    warm = events[WARMUP_EPOCHS]
+    measured = events[1 + WARMUP_EPOCHS:]
     lines = sum(e["numInputRows"] for e in measured)
-    run.e2e("items_per_s", lines / (epoch_end(measured[-1]) - epoch_end(events[0])))
+    run.e2e("items_per_s", lines / (epoch_end(measured[-1]) - epoch_end(warm)))
     run.latency([e["durationMs"]["triggerExecution"] / 1000.0 for e in measured])
-    run.note(f"{len(measured)} measured epochs, {lines} lines")
+    run.note(f"{len(measured)} measured epochs, {lines} lines; epoch ms "
+             + " ".join(str(e["durationMs"]["triggerExecution"]) for e in events))
 
     checkpoint, data_dir = os.path.join(base, "checkpoint"), os.path.join(base, "data")
     consumed = {os.path.basename(p) for files in _source_log(checkpoint).values() for p in files}
-    ranges = [(firsts[k], levels[k]) for k in range(placed)
-              if f"b{k:04d}.txt" in consumed]
-    run.check("all_placed_consumed", len(ranges) == placed, f"{len(ranges)}/{placed} files")
+    ranges = [(firsts[k], levels[k]) for k in range(len(placed)) if names[k] in consumed]
+    run.check("all_placed_consumed", len(ranges) == len(placed),
+              f"{len(ranges)}/{len(placed)} files")
     packs = _read_packs(data_dir)
     check_packs(run, packs, BACKLOG_PACK, _ids_by_level(ranges))
     if run.trace:
         n_lines = sum(len(lv) for _, lv in ranges)
         _stream_layers(run, measured, checkpoint, data_dir, n_lines,
                        packs.groupby(["level", "pack_id"]).ngroups)
-        run.layer("sources.backlog_lines_max", 2.0 * BACKLOG_LINES)
+        by_name = dict(zip(names, sizes))
+        run.layer("sources.backlog_lines_max", float(max(
+            _backlog_lines(events, placed, by_name, e) for e in measured)))
         run.epoch_ledger(measured)
         _extraction_rate(run, spark, spool)
+        # the batch registry plans are measured here too (see README)
+        batch.trace_mix(run, spark)
         run.scaling("scaling.ingest_lines_per_s_local1",
                     lambda s: _local1_lines_per_s(run, s, spool))
 
 
 def _local1_lines_per_s(run, spark, spool: str) -> float:
-    """The same drain on a local[1] session over the set-up file and two
+    """The same drain on a local[1] session over the set-up file and four
     full files: lines/s over the epochs after the first."""
     local1 = os.path.join(run.work, "spool_local1")
     os.makedirs(local1)
-    for name in ("b0000.txt", "b0001.txt", "b0002.txt"):
+    for k in range(5):
+        name = f"b{k:04d}.txt"
         shutil.copy(os.path.join(spool, name), os.path.join(local1, name))
-    q = _start(spark, local1, os.path.join(run.work, "sink_local1"), BACKLOG_PACK, max_files=1)
+    q = _start(spark, local1, os.path.join(run.work, "sink_local1"))
     q.processAllAvailable()
     q.stop()
     events = epochs_with_input(q)[1:]
     secs = sum(e["durationMs"]["triggerExecution"] for e in events) / 1000.0
     return sum(e["numInputRows"] for e in events) / secs if secs else 0.0
-
-
-# ---------------------------------------------------------------------------
-# ingest_trickle
-# ---------------------------------------------------------------------------
-
-
-def run_trickle(run) -> None:
-    per_file = int(TRICKLE_RATE * TRICKLE_INTERVAL)
-    manifest_path = os.path.join(run.work, "manifest.json")
-    stop_file = os.path.join(run.work, "stop")
-    spool = os.path.join(run.work, "spool")
-    os.makedirs(spool)
-    generator = None
-
-    def start_generator():
-        # started after the session launch, so the first epoch sees one
-        # drop, not the backlog of a whole launch
-        nonlocal generator
-        generator = subprocess.Popen(
-            [sys.executable, os.path.join(os.path.dirname(os.path.abspath(__file__)), "trickle.py"),
-             "--spool", spool, "--manifest", manifest_path, "--seed", str(run.seed),
-             "--rate", str(TRICKLE_RATE), "--interval", str(TRICKLE_INTERVAL),
-             "--stop-file", stop_file],
-        )
-        run.excluded_pids.add(generator.pid)
-        t_end = time.time() + 10
-        while not glob.glob(os.path.join(spool, "t*.txt")) and time.time() < t_end:
-            time.sleep(0.02)
-
-    try:
-        with run.rss():
-            spark, q, base = _setup(run, spool, TRICKLE_PACK, max_files=None,
-                                    before_start=start_generator)
-            t_warm = time.time()
-            time.sleep(run.seconds)
-            t_end = time.time()
-            with open(stop_file, "w"):
-                pass
-            generator.wait(timeout=30)
-            q.processAllAvailable()
-            q.stop()
-    finally:
-        if generator is not None and generator.poll() is None:
-            generator.kill()
-            generator.wait()
-    with open(manifest_path) as f:
-        manifest = json.load(f)
-    files, t0, rate = manifest["files"], manifest["t0"], manifest["rate"]
-    checkpoint, data_dir = os.path.join(base, "checkpoint"), os.path.join(base, "data")
-    events = epochs_with_input(q)
-    end_by_batch = {e["batchId"]: epoch_end(e) for e in events}
-    stamps = sorted((ts, b) for b, ts in _batch_timestamps(checkpoint).items())
-    packs = _read_packs(data_dir)
-    last = packs.groupby(["level", "pack_id"]).agg(id=("id", "max"), time=("time", "max"))
-    lat = []
-    for row in last.itertuples():
-        # the pack's newest row carries the batch timestamp of its epoch
-        batch = min(stamps, key=lambda sb: abs(sb[0] - row.time))[1]
-        end = end_by_batch.get(batch)
-        due = t0 + (int(row.id) + 1) / rate
-        if end is not None and due >= t_warm and end <= t_end:
-            lat.append(end - due)
-    run.latency(lat)
-    in_window = [e for e in events if t_warm <= epoch_end(e) <= t_end]
-    run.e2e("items_per_s", sum(e["numInputRows"] for e in in_window) / (t_end - t_warm))
-
-    # validity: the generator kept its schedule and the engine kept up
-    late = max(f["written"] - f["due"] for f in files)
-    run.check("generator_on_time", late <= MAX_GENERATOR_LATE_S, f"max lateness {late:.3f}s")
-    generated = sum(f["n"] for f in files if f["written"] <= t_end)
-    consumed = sum(e["numInputRows"] for e in events if epoch_end(e) <= t_end)
-    run.check("backlog_bounded", generated - consumed <= MAX_BACKLOG_S * rate,
-              f"{generated - consumed} lines unconsumed at window end")
-    run.note(f"{len(lat)} pack samples, generator max late {late:.4f}s, "
-             f"end backlog {generated - consumed} lines")
-
-    # replay the generator's seeded draws for every line's level
-    rng = np.random.default_rng(run.seed)
-    ranges = [(f["first_id"], gen.probe_lines(rng, f["first_id"], f["n"])[1]) for f in files]
-    check_packs(run, packs, TRICKLE_PACK, _ids_by_level(ranges))
-    if run.trace:
-        measured = in_window
-        _stream_layers(run, measured, checkpoint, data_dir, sum(f["n"] for f in files), len(last))
-        backlog_max = 0
-        for e in measured:
-            start = epoch_end(e) - e["durationMs"]["triggerExecution"] / 1000.0
-            made = sum(f["n"] for f in files if f["written"] <= start)
-            done = sum(x["numInputRows"] for x in events if epoch_end(x) <= start)
-            backlog_max = max(backlog_max, made - done)
-        run.layer("sources.backlog_lines_max", float(backlog_max))
-        run.epoch_ledger(measured)
-        _extraction_rate(run, spark, spool)

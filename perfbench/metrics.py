@@ -4,9 +4,7 @@ names; ``tests/test_helpers.py`` keeps the two in step."""
 from __future__ import annotations
 
 #: the workloads BENCHMARK.json lists
-WORKLOADS = ("ingest_backlog", "curate_stream", "batch_mix")
-#: runnable by hand, left out of BENCHMARK.json to fit its time budget
-MANUAL_WORKLOADS = ("ingest_trickle",)
+WORKLOADS = ("ingest_backlog", "curate_stream")
 
 #: (name, unit, better) of every end-to-end metric; every workload
 #: reports every one (see README.md for what each means per workload)
@@ -72,7 +70,6 @@ PER_LAYER = (
     ("curation.accepted", "count", "higher"),
     ("curation.accept_frac", "ratio", "higher"),
     ("neardup.process_epoch_ms", "ms", "lower"),
-    ("neardup.late_over_early", "ratio", "lower"),
     ("neardup.index_rows", "count", "lower"),
     ("neardup.index_files", "count", "lower"),
     ("neardup.index_bytes", "B", "lower"),

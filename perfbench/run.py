@@ -35,7 +35,7 @@ from common import (  # noqa: E402
     remove_tree,
     tail_percentile,
 )
-from metrics import END_TO_END, MANUAL_WORKLOADS, PER_LAYER, WORKLOADS  # noqa: E402
+from metrics import END_TO_END, PER_LAYER, WORKLOADS  # noqa: E402
 
 
 class Run:
@@ -54,8 +54,9 @@ class Run:
         self.checks: list[tuple[str, bool, str]] = []
         self.attempted = 0
         self.failed = 0
-        self.excluded_pids: set[int] = set()
         self.ledgers: list[tuple] = []
+        #: traced runs: extra records written to ``<out>/<name>.json``
+        self.outputs: dict[str, object] = {}
 
     # -- sessions ----------------------------------------------------------
 
@@ -83,7 +84,8 @@ class Run:
 
     def report_setup(self, launch_s: float, start_s: float) -> None:
         """set-up time = session launch + what the workload does before its
-        first measured unit (stream start and first epoch, or a cold pass)."""
+        first measured epoch (stream start, the first epoch and any warm-up
+        epochs)."""
         self.note(f"set-up: session launch {launch_s:.3f}s + start {start_s:.3f}s")
         self.e2e("setup_s", launch_s + start_s)
 
@@ -140,7 +142,7 @@ class Run:
 
 class _RssMetric(RssSampler):
     def __init__(self, run: Run):
-        super().__init__(exclude=run.excluded_pids)
+        super().__init__()
         self.run = run
 
     def __exit__(self, *exc):
@@ -182,7 +184,7 @@ def shutdown_spark() -> None:
 
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    p.add_argument("--workload", required=True, choices=WORKLOADS + MANUAL_WORKLOADS)
+    p.add_argument("--workload", required=True, choices=WORKLOADS)
     p.add_argument("--seed", type=int, required=True)
     p.add_argument("--seconds", type=int, required=True)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)

@@ -222,3 +222,83 @@ def test_curation_ground_truth():
     for d, k in kind1.items():
         words = set(text[d].split())
         assert (k == "spam") == (words <= spam_words)
+
+
+# -- file-source log and backlog -------------------------------------------
+
+
+def _write_log(path, entries):
+    with open(path, "w") as f:
+        f.write("v1\n" + "".join(json.dumps(e) + "\n" for e in entries))
+
+
+def test_source_log_reads_compacted_batches(tmp_path):
+    import ingest
+
+    log = tmp_path / "sources" / "0"
+    log.mkdir(parents=True)
+    _write_log(log / "9.compact", [
+        {"path": f"file:/s/b{k:04d}.txt", "timestamp": 0, "batchId": k} for k in range(10)])
+    _write_log(log / "10", [{"path": "file:/s/b0010.txt", "timestamp": 0, "batchId": 10}])
+    _write_log(log / "8", [{"path": "file:/s/b0008.txt", "timestamp": 0, "batchId": 8}])
+    (log / ".10.crc").write_text("x")
+    got = ingest._source_log(str(tmp_path))
+    assert sorted(got) == list(range(11))
+    assert got[8] == ["file:/s/b0008.txt"]  # in the compact file and its own
+    assert got[10] == ["file:/s/b0010.txt"]
+
+
+def _epoch(batch, start_s, dur_ms, rows):
+    from datetime import datetime, timezone
+
+    ts = datetime.fromtimestamp(start_s, timezone.utc).isoformat().replace("+00:00", "Z")
+    return {"batchId": batch, "timestamp": ts, "numInputRows": rows,
+            "durationMs": {"triggerExecution": dur_ms}}
+
+
+def test_backlog_lines_at_trigger_start():
+    import ingest
+
+    events = [_epoch(0, 100.0, 1000, 10), _epoch(1, 101.0, 2000, 20), _epoch(2, 103.0, 2000, 20)]
+    sizes = {"a": 10, "b": 20, "c": 20}
+    placed = {"a": 99.0, "b": 100.5, "c": 102.0}
+    # epoch 1 starts at 101: a and b placed, epoch 0 (10 lines) committed
+    assert ingest._backlog_lines(events, placed, sizes, events[1]) == 20
+    # epoch 2 starts at 103: all placed, epochs 0 and 1 committed
+    assert ingest._backlog_lines(events, placed, sizes, events[2]) == 20
+    assert ingest._backlog_lines(events, placed, sizes, events[0]) == 10
+
+
+# -- steadiness record ---------------------------------------------------------
+
+
+def test_steadiness_compares_common_traces_only():
+    import steadiness
+
+    a = steadiness.counters({
+        "ledger": {"epochs": {"1": {"jobs": 1, "stages": 3, "tasks": 9, "busy_ms": 5.0},
+                              "2": {"jobs": 1, "stages": 3, "tasks": 9, "busy_ms": 7.0}}},
+        "funnel": {"1": {"accepted": 5, "dup_rejected": 1}},
+    })
+    b = steadiness.counters({
+        "ledger": {"epochs": {"1": {"jobs": 1, "stages": 3, "tasks": 9, "busy_ms": 6.0},
+                              "2": {"jobs": 2, "stages": 3, "tasks": 9, "busy_ms": 7.0},
+                              "3": {"jobs": 1, "stages": 3, "tasks": 9, "busy_ms": 7.0}}},
+        "funnel": {"1": {"accepted": 5, "dup_rejected": 1}},
+    })
+    both, differ = steadiness.compare(a, b)
+    # busy time is not a counter; epoch 3 was measured by one run only
+    assert both == ["epochs:1", "epochs:2", "funnel:1"]
+    assert differ == ["epochs:2"]
+
+
+def test_rss_sampler_resets_earlier_peaks():
+    from common import RssSampler
+
+    block = bytearray(200 * 2**20)
+    for i in range(0, len(block), 4096):
+        block[i] = 1
+    del block
+    with RssSampler(interval_s=0.05) as s:
+        pass
+    assert s.peak < 180 * 2**20

@@ -14,15 +14,12 @@ from metrics import BATCH_QUERIES, PER_LAYER
 
 def runner(workload: str):
     """The function that runs *workload* (imports the engine lazily)."""
-    import batch
     import curate
     import ingest
 
     return {
         "ingest_backlog": ingest.run_backlog,
-        "ingest_trickle": ingest.run_trickle,
         "curate_stream": curate.run_curate,
-        "batch_mix": batch.run_batch,
     }[workload]
 
 
@@ -83,6 +80,9 @@ def finish_trace(run) -> None:
         json.dump(written, f, indent=1)
     with open(os.path.join(run.out, "e2e.json"), "w") as f:
         json.dump(run.metrics, f, indent=1)
+    for name, record in run.outputs.items():
+        with open(os.path.join(run.out, f"{name}.json"), "w") as f:
+            json.dump(record, f, indent=1)
     with open(os.path.join(run.out, "layers.tsv"), "w") as f:
         for name, unit, _ in PER_LAYER:
             f.write(f"{name}\t{run.layers.get(name, 0.0):.6g}\t{unit}\n")
