@@ -125,75 +125,65 @@ def test_curate_requires_model(spark, tmp_path):
 
 def test_compact_index_mode_end_to_end(spark, tmp_path, capsys):
     """--compact-index (r13): folds the signature index's batch
-    partitions AND the partitioned-gate sidecar in one maintenance
-    call. Default through-batch is the highest batch present MINUS ONE
-    (ADVICE r13): a non-graceful stop replays the max epoch on
-    restart, and that replay must not find its own rows already folded
-    into batch=0 (self-flagging). The compacted index still answers
-    probes and the gate still covers."""
+    partitions in one maintenance call. Default through-batch is the
+    highest batch present MINUS ONE (ADVICE r13): a non-graceful stop
+    replays the max epoch on restart, and that replay must not find its
+    own rows already folded into batch=0 (self-flagging). The compacted
+    index still answers probes."""
     import json as _json
     import os as _os
 
     from tower_parse_spark.__main__ import run_compact_index
-    from tower_parse_spark.operators import bloom as B
     from tower_parse_spark.streaming import neardup as ND
 
     idx = str(tmp_path / "idx")
     ver = str(tmp_path / "ver")
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64  # force the partitioned gate so both compact
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        texts = [
-            "the quick brown fox jumps over the lazy dog today",
-            "pack my box with five dozen liquor jugs right now",
-            "sphinx of black quartz judge my vow and more words",
-        ]
-        for i, t in enumerate(texts):
-            b = spark.createDataFrame([(i + 1, t)], "doc_id long, text string")
-            ND.process_epoch(b, i, idx, ver, band_gate=True)
-        assert run_compact_index(spark, idx, None) == 0
-        out = [
-            _json.loads(line)
-            for line in capsys.readouterr().out.strip().splitlines()
-        ]
-        assert out[0]["through_batch"] == 1  # max=2, default = max-1
-        assert out[0]["index"]["n_partitions_removed"] == 2
-        assert out[1]["part_gate"]["n_partitions_removed"] == 2
-        assert sorted(
-            d
-            for d in _os.listdir(idx)
-            if d.startswith("batch=")
-        ) == ["batch=0", "batch=2"]  # the replayable max epoch survives
-        # the loop continues on the compacted layout: a near-dup of a
-        # pre-compaction doc still flags through the still-live gate
-        assert ND.read_part_gate(spark, idx, 3) is not None
-        # a REPLAY of the max epoch is still safe: its probe reads
-        # batch < 2, which no longer contains its own rows
-        b_replay = spark.createDataFrame(
-            [(3, texts[2])], "doc_id long, text string"
-        )
-        ND.process_epoch(b_replay, 2, idx, ver, band_gate=True)
-        replay_rows = (
-            spark.read.option("basePath", ver)
-            .parquet(ver)
-            .filter("doc_id = 3")
-            .collect()
-        )
-        assert replay_rows and not replay_rows[0]["is_dup"]  # no self-flag
-        # explicit --through-batch=max remains available for a stream
-        # known committed through max
-        assert run_compact_index(spark, idx, 2) == 0
-        capsys.readouterr()
-        b3 = spark.createDataFrame(
-            [(30, texts[0] + " once more")], "doc_id long, text string"
-        )
-        ND.process_epoch(b3, 3, idx, ver, band_gate=True)
-        rows = spark.read.option("basePath", ver).parquet(ver)
-        r30 = rows.filter("doc_id = 30").collect()
-        assert r30 and r30[0]["is_dup"]
-    finally:
-        B.MAX_GATE_BITS = orig
+    texts = [
+        "the quick brown fox jumps over the lazy dog today",
+        "pack my box with five dozen liquor jugs right now",
+        "sphinx of black quartz judge my vow and more words",
+    ]
+    for i, t in enumerate(texts):
+        b = spark.createDataFrame([(i + 1, t)], "doc_id long, text string")
+        ND.process_epoch(b, i, idx, ver)
+    assert run_compact_index(spark, idx, None) == 0
+    out = [
+        _json.loads(line)
+        for line in capsys.readouterr().out.strip().splitlines()
+    ]
+    assert len(out) == 1
+    assert out[0]["through_batch"] == 1  # max=2, default = max-1
+    assert out[0]["index"]["n_partitions_removed"] == 2
+    assert sorted(
+        d
+        for d in _os.listdir(idx)
+        if d.startswith("batch=")
+    ) == ["batch=0", "batch=2"]  # the replayable max epoch survives
+    # a REPLAY of the max epoch is still safe: its probe reads
+    # batch < 2, which no longer contains its own rows
+    b_replay = spark.createDataFrame(
+        [(3, texts[2])], "doc_id long, text string"
+    )
+    ND.process_epoch(b_replay, 2, idx, ver)
+    replay_rows = (
+        spark.read.option("basePath", ver)
+        .parquet(ver)
+        .filter("doc_id = 3")
+        .collect()
+    )
+    assert replay_rows and not replay_rows[0]["is_dup"]  # no self-flag
+    # explicit --through-batch=max remains available for a stream
+    # known committed through max; the loop continues on the compacted
+    # layout: a near-dup of a pre-compaction doc still flags
+    assert run_compact_index(spark, idx, 2) == 0
+    capsys.readouterr()
+    b3 = spark.createDataFrame(
+        [(30, texts[0] + " once more")], "doc_id long, text string"
+    )
+    ND.process_epoch(b3, 3, idx, ver)
+    rows = spark.read.option("basePath", ver).parquet(ver)
+    r30 = rows.filter("doc_id = 30").collect()
+    assert r30 and r30[0]["is_dup"]
 
 
 def test_phash_dedup_mode_end_to_end(spark, tmp_path):

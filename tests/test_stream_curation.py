@@ -356,3 +356,52 @@ def test_quarantine_schema_stable_across_lm_rearm(spark, tmp_path):
     assert rows[20].reject_stage == "perplexity"
     assert rows[20].cross_entropy == ces[2]
     assert rows[21].reject_stage == "quality" and rows[21].cross_entropy is None
+
+
+#: jobs the SECOND curate_epoch below launches (measured: 26, identical
+#: over repeated runs on local[4])
+EPOCH_JOBS = 26
+#: slack for one plan-dependent job (an AQE re-plan or broadcast)
+EPOCH_JOBS_SLACK = 1
+
+
+def test_epoch_job_count_pinned(spark, tmp_path):
+    """Job budget: the second of two curate_epoch calls (a live index to
+    probe, pinned model, family validated up front — the stream_curate
+    shape) launches at most EPOCH_JOBS + EPOCH_JOBS_SLACK Spark jobs,
+    counted by job group through the status tracker. A job added to the
+    epoch path fails this before it shows up as wall time; a job removed
+    should lower the pin."""
+    idx, acc, rej, ver = _paths(tmp_path)
+    m = _model(spark)
+    model = NBModel(
+        weights=m.weights.localCheckpoint(eager=True),
+        consts=m.consts.localCheckpoint(eager=True),
+        n_features=m.n_features,
+    )
+    epochs = [
+        [(1, CLEAN_A), (2, CLEAN_B), (3, CLEAN_A + " " + SPAM)],
+        [(10, CLEAN_A + " indeed"), (11, CLEAN_C), (12, SPAM + " again")],
+    ]
+    sc = spark.sparkContext
+    group = f"test_epoch_job_count_pinned-{time.time_ns()}"
+    CU.curate_epoch(
+        _docs(spark, epochs[0]), 0, model, idx, acc, rej, ver,
+        validate_family=False,
+    )
+    sc.setJobGroup(group, "second curate_epoch")
+    try:
+        CU.curate_epoch(
+            _docs(spark, epochs[1]), 1, model, idx, acc, rej, ver,
+            validate_family=False,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= EPOCH_JOBS + EPOCH_JOBS_SLACK, n_jobs
+    # the epoch did its work: the near-copy was suppressed
+    verd = {
+        r.doc_id: r.is_dup
+        for r in spark.read.parquet(f"{ver}/batch=1").collect()
+    }
+    assert verd[10] is True

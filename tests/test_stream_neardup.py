@@ -224,848 +224,166 @@ def test_compact_minhash_index_via_file_uri(spark, tmp_path):
     assert verd == {10: True}
 
 
-def _verdict_rows(spark, ver):
-    return sorted(
-        tuple(r)
+_QUIET_FIRST_EPOCH = """
+import sys
+from tower_parse_spark.session import get_spark
+from tower_parse_spark.streaming import neardup as ND
+
+spark = get_spark("first_epoch", cpus="1")
+spark.sparkContext.setLogLevel("WARN")
+b = spark.createDataFrame([(1, sys.argv[2])], "doc_id long, text string")
+ND.process_epoch(b, 0, sys.argv[1] + "/idx", sys.argv[1] + "/ver")
+spark.stop()
+"""
+
+
+def test_first_epoch_on_missing_index_is_quiet(tmp_path, capfd):
+    """A stream's first epoch probes an index that does not exist yet —
+    the expected path, decided by a FileSystem exists() check, so the
+    reader's PATH_NOT_FOUND warning (a Java stack trace on stderr) never
+    fires. The epoch runs in a child process so its JVM writes to the
+    captured stderr; the in-suite session's JVM does not."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run(
+        [sys.executable, "-c", _QUIET_FIRST_EPOCH, str(tmp_path), T_A],
+        cwd=root,
+        env={**os.environ, "PYTHONPATH": root},
+        check=True,
+        timeout=300,
+    )
+    err = capfd.readouterr().err
+    assert os.path.isdir(str(tmp_path / "idx" / "batch=0"))  # epoch ran
+    assert "does not exist" not in err and "PATH_NOT_FOUND" not in err
+
+
+def test_corrupt_index_fails_loudly(spark, tmp_path):
+    """Only a MISSING index reads as empty: a partition holding a file
+    that is not parquet fails the probe instead of reading as history
+    with no rows (which would pass every near-copy as novel)."""
+    idx, ver, _ = _paths(tmp_path)
+    os.makedirs(os.path.join(idx, "batch=0"))
+    with open(os.path.join(idx, "batch=0", "part-0.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    b = spark.createDataFrame([(1, T_A)], "doc_id long, text string")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        ND.process_epoch(b, 1, idx, ver)
+
+
+def test_index_with_old_gate_sidecars_still_probes_and_compacts(
+    spark, tmp_path, capsys
+):
+    """Upgrade path: an index written by an older build carries band-gate
+    sidecar dirs (``_bloom/``, ``_bloom_part/``) next to its ``batch=N``
+    partitions. The probe ignores them (underscore dirs are invisible to
+    partition discovery) and still flags a near-copy, and --compact-index
+    folds the partitions while leaving those dirs byte-for-byte alone."""
+    import json as _json
+
+    from tower_parse_spark.__main__ import run_compact_index
+
+    idx, ver, _ = _paths(tmp_path)
+    for i, t in enumerate([T_A, T_B]):
+        b = spark.createDataFrame([(i + 1, t)], "doc_id long, text string")
+        ND.process_epoch(b, i, idx, ver)
+    spark.createDataFrame(
+        [([1, 2], 128, 7, 10)],
+        "words array<long>, n_bits long, n_hashes long, n_keys long",
+    ).write.parquet(f"{idx}/_bloom/batch=1")
+    spark.createDataFrame([(0, 1)], "word_idx long, word long").write.parquet(
+        f"{idx}/_bloom_part/batch=1"
+    )
+    spark.createDataFrame(
+        [(128, 7, 1, 1)],
+        "n_bits long, n_hashes long, since_batch long, covered_through long",
+    ).write.parquet(f"{idx}/_bloom_part/_meta")
+
+    def sidecar_files():
+        return sorted(
+            (os.path.relpath(p, idx), open(p, "rb").read())
+            for d in ("_bloom", "_bloom_part")
+            for p in glob.glob(os.path.join(idx, d, "**"), recursive=True)
+            if os.path.isfile(p)
+        )
+
+    before = sidecar_files()
+    assert before
+    b2 = spark.createDataFrame(
+        [(10, T_A + " indeed"), (11, T_C)], "doc_id long, text string"
+    )
+    ND.process_epoch(b2, 2, idx, ver)
+    out = {
+        r.doc_id: r
         for r in spark.read.option("basePath", ver).parquet(ver).collect()
-    )
-
-
-def test_band_gate_is_verdict_identical(spark, tmp_path):
-    """r10 (VERDICT r9 Next #5): the band-key Bloom gate prunes the
-    history probe without changing ANY verdict — near-dups of indexed
-    docs still flag, novel docs still pass, across epochs with mixed
-    novel/dup content. Gated and ungated runs over identical batches
-    produce identical verdict rows."""
-    batches = [
-        [(1, T_A), (2, T_B)],
-        [(10, T_A + " indeed"), (11, T_C)],           # 10 = hist near-dup
-        [(20, T_C + " also"), (21, "totally novel words appear here")],
+    }
+    assert out[10].is_dup and not out[11].is_dup
+    capsys.readouterr()
+    assert run_compact_index(spark, idx, None) == 0
+    report = [
+        _json.loads(line) for line in capsys.readouterr().out.splitlines()
     ]
-    gated, ungated = {}, {}
-    for flag, store in ((True, gated), (False, ungated)):
-        sub = tmp_path / ("g" if flag else "u")
-        idx, ver = str(sub / "idx"), str(sub / "ver")
-        for i, rows in enumerate(batches):
-            b = spark.createDataFrame(rows, "doc_id long, text string")
-            ND.process_epoch(b, i, idx, ver, band_gate=flag)
-        store["rows"] = _verdict_rows(spark, ver)
-        store["idx"] = sorted(
-            (r.doc_id, r.band_key)
-            for r in spark.read.option("basePath", idx).parquet(idx).collect()
-        )
-    assert gated["rows"] == ungated["rows"]
-    assert gated["idx"] == ungated["idx"]
-    # sanity: the near-dup actually flagged (the test isn't vacuous)
-    flagged = [r for r in gated["rows"] if r[0] == 10]
-    assert flagged and any(r[3] for r in gated["rows"])
-
-
-def test_band_gate_replay_is_idempotent(spark, tmp_path):
-    """The bloom sidecar follows the OVERWRITE batch=N replay rule: a
-    replayed epoch rewrites the same cumulative row (same n_keys, same
-    bits) and verdicts are unchanged."""
-    idx, ver, _ = _paths(tmp_path)
-    b0 = spark.createDataFrame([(1, T_A), (2, T_B)], "doc_id long, text string")
-    ND.process_epoch(b0, 0, idx, ver, band_gate=True)
-    b1 = spark.createDataFrame([(10, T_A), (12, T_C)], "doc_id long, text string")
-    ND.process_epoch(b1, 1, idx, ver, band_gate=True)
-    bloom_dir = ND._bloom_path(idx)
-    first = sorted(
-        tuple(r)
-        for r in spark.read.option("basePath", bloom_dir)
-        .parquet(bloom_dir)
-        .collect()
-    )
-    before = _verdict_rows(spark, ver)
-    ND.process_epoch(b1, 1, idx, ver, band_gate=True)  # replay
-    again = sorted(
-        tuple(r)
-        for r in spark.read.option("basePath", bloom_dir)
-        .parquet(bloom_dir)
-        .collect()
-    )
-    assert again == first
-    assert _verdict_rows(spark, ver) == before
-    # still flags the cross-epoch dup
-    r10 = [r for r in _verdict_rows(spark, ver) if r[0] == 10]
-    assert r10[0][3] is True
-
-
-def test_band_gate_catches_up_on_existing_index(spark, tmp_path):
-    """Turning the gate on over an index built WITHOUT it must never
-    produce false negatives: the stale/missing sidecar disables the
-    gate for that epoch (read_gate_bloom -> None) and the write path
-    rebuilds the cumulative row from the full index, so the NEXT epoch
-    is gated with full coverage."""
-    idx, ver, _ = _paths(tmp_path)
-    b0 = spark.createDataFrame([(1, T_A), (2, T_B)], "doc_id long, text string")
-    ND.process_epoch(b0, 0, idx, ver)  # ungated history
-    assert ND.read_gate_bloom(spark, idx, 1) is None
-    # first gated epoch: probe ungated (no covering row), sidecar rebuilt
-    b1 = spark.createDataFrame([(10, T_A)], "doc_id long, text string")
-    ND.process_epoch(b1, 1, idx, ver, band_gate=True)
-    r10 = [r for r in _verdict_rows(spark, ver) if r[0] == 10]
-    assert r10[0][3] is True  # the dup was caught despite the stale sidecar
-    gate = ND.read_gate_bloom(spark, idx, 2)
-    assert gate is not None
-    # second gated epoch: a near-dup of batch-0 content must STILL flag
-    # through the rebuilt bloom (coverage includes pre-gate history)
-    b2 = spark.createDataFrame([(20, T_B + " too")], "doc_id long, text string")
-    ND.process_epoch(b2, 2, idx, ver, band_gate=True)
-    r20 = [r for r in _verdict_rows(spark, ver) if r[0] == 20]
-    assert r20[0][3] is True
-
-
-def test_band_gate_sizing_invariant_across_growth(spark, tmp_path):
-    """The cumulative row's geometry always satisfies the target-FP
-    capacity for its recorded key count (fast-path ORs until capacity,
-    then rebuild at headroom x keys)."""
-    from tower_parse_spark.operators.bloom import bloom_size_for
-
-    idx, ver, _ = _paths(tmp_path)
-    texts = [T_A, T_B, T_C]
-    for i in range(4):
-        rows = [
-            (100 * i + j, f"{texts[j % 3]} variation {i} {j} unique")
-            for j in range(6)
-        ]
-        b = spark.createDataFrame(rows, "doc_id long, text string")
-        ND.process_epoch(b, i, idx, ver, band_gate=True)
-        bloom_dir = ND._bloom_path(idx)
-        row = (
-            spark.read.option("basePath", bloom_dir)
-            .parquet(bloom_dir)
-            .filter(F.col("batch").cast("long") == i)
-            .first()
-        )
-        assert row["n_bits"] >= bloom_size_for(
-            max(int(row["n_keys"]), 1), ND.BLOOM_TARGET_FP
-        )
-        assert row["n_bits"] == 64 * len(row["bloom"])
-
-
-def test_band_gate_cap_disables_gate_not_correctness(spark, tmp_path):
-    """VERDICT r10 #3 + ADVICE r11: when the rebuild sizing exceeds
-    MAX_GATE_BITS the epoch warns ONCE and writes an n_bits=0 TOMBSTONE
-    row; later epochs see a covering row (no misattributed gapped-id
-    warning, no per-epoch full-index rebuild), probe ungated, roll
-    n_keys forward on a fresh tombstone, and verdicts stay correct."""
-    import warnings
-
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, _ = _paths(tmp_path)
-    b0 = spark.createDataFrame([(1, T_A), (2, T_B)], "doc_id long, text string")
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64  # any real corpus sizes over this
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            ND.process_epoch(b0, 0, idx, ver, band_gate=True)
-        assert any("MAX_GATE_BITS" in str(x.message) for x in w)
-        # a tombstone landed: covering row, zero geometry, keys recorded
-        row0 = ND._read_gate_row(spark, idx, 0)
-        assert row0 is not None and int(row0["n_bits"]) == 0
-        assert list(row0["bloom"]) == [] and int(row0["n_keys"]) > 0
-        assert ND.read_gate_bloom(spark, idx, 1) is None  # gate off
-        # next epoch: NO warning of either kind (the disable is recorded,
-        # not re-diagnosed), dup still flags, tombstone rolls forward
-        b1 = spark.createDataFrame([(10, T_A)], "doc_id long, text string")
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            ND.process_epoch(b1, 1, idx, ver, band_gate=True)
-        assert not any("MAX_GATE_BITS" in str(x.message) for x in w)
-        assert not any("no covering row" in str(x.message) for x in w)
-        row1 = ND._read_gate_row(spark, idx, 1)
-        assert row1 is not None and int(row1["n_bits"]) == 0
-        assert int(row1["n_keys"]) >= int(row0["n_keys"])
-    finally:
-        B.MAX_GATE_BITS = orig
-    rows = _verdict_rows(spark, ver)
-    r10 = [r for r in rows if r[0] == 10]
-    assert r10 and r10[0][3] is True  # cross-epoch near-dup still caught
-
-
-def test_band_gate_cap_disables_through_streaming_path(spark, tmp_path):
-    """VERDICT r11 #6: the cap must also disable the gate when epochs
-    arrive through the real Structured Streaming path (foreachBatch ->
-    process_epoch), not only via direct process_epoch calls: the run
-    completes, every sidecar row is a tombstone, the probe stays
-    ungated, and the cross-batch near-dup is still caught."""
-    import warnings
-
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, ckpt = _paths(tmp_path)
-    spool = _spool(
-        tmp_path,
-        [[(1, T_A), (2, T_B)], [(10, T_A)], [(20, T_C)]],
-    )
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            q = ND.stream_minhash_dedup(
-                _stream(spark, spool), idx, ver, ckpt, band_gate=True
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-    finally:
-        B.MAX_GATE_BITS = orig
-    bloom_dir = ND._bloom_path(idx)
-    rows = (
-        spark.read.option("basePath", bloom_dir).parquet(bloom_dir).collect()
-    )
-    assert rows and all(int(r["n_bits"]) == 0 for r in rows)
-    assert ND.read_gate_bloom(spark, idx, len(rows)) is None
-    r10 = [r for r in _verdict_rows(spark, ver) if r[0] == 10]
-    assert r10 and r10[0][3] is True
-
-
-def test_band_gate_gapped_batch_ids_warn(spark, tmp_path):
-    """ADVICE r10: non-contiguous batch ids leave the gate without a
-    covering row — correct but gate-defeating, so the epoch warns."""
-    import warnings
-
-    idx, ver, _ = _paths(tmp_path)
-    b0 = spark.createDataFrame([(1, T_A)], "doc_id long, text string")
-    ND.process_epoch(b0, 0, idx, ver, band_gate=True)
-    b5 = spark.createDataFrame([(5, T_C)], "doc_id long, text string")
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        ND.process_epoch(b5, 5, idx, ver, band_gate=True)  # gap: 0 -> 5
-    assert any("no covering row" in str(x.message) for x in w)
-    # contiguous ids stay silent
-    b1 = spark.createDataFrame([(6, T_B)], "doc_id long, text string")
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        ND.process_epoch(b1, 6, idx, ver, band_gate=True)
-    assert not any("no covering row" in str(x.message) for x in w)
-
-
-def test_band_gate_tombstone_self_heals_on_raised_cap(spark, tmp_path):
-    """A tombstoned gate re-enables itself when MAX_GATE_BITS is raised
-    between runs (keys never shrink, so that is the only way a
-    tombstone's projected geometry starts fitting): the next epoch
-    rebuilds a real filter from the full index instead of rolling the
-    tombstone forward."""
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, _ = _paths(tmp_path)
-    b0 = spark.createDataFrame([(1, T_A), (2, T_B)], "doc_id long, text string")
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        ND.process_epoch(b0, 0, idx, ver, band_gate=True)
-        assert int(ND._read_gate_row(spark, idx, 0)["n_bits"]) == 0
-    finally:
-        B.MAX_GATE_BITS = orig
-    # cap back at the real value: epoch 1 must rebuild a live gate
-    b1 = spark.createDataFrame([(10, T_C)], "doc_id long, text string")
-    ND.process_epoch(b1, 1, idx, ver, band_gate=True)
-    row1 = ND._read_gate_row(spark, idx, 1)
-    assert row1 is not None and int(row1["n_bits"]) > 0
-    assert ND.read_gate_bloom(spark, idx, 2) is not None
-    # and the re-enabled gate still catches a cross-epoch dup
-    b2 = spark.createDataFrame([(20, T_A)], "doc_id long, text string")
-    ND.process_epoch(b2, 2, idx, ver, band_gate=True)
-    r20 = [r for r in _verdict_rows(spark, ver) if r[0] == 20]
-    assert r20 and r20[0][3] is True
-
-
-def test_part_gate_stays_active_past_cap_verdict_identical(spark, tmp_path):
-    """VERDICT r12 #3 done-condition: past MAX_GATE_BITS the gate stays
-    ON as the partitioned (_bloom_part) relation — driven through the
-    REAL streaming path — with verdict- and index-identical output vs
-    an ungated run over the same batches. The cap-transition epoch
-    rebuilds the partitioned filter from the full index; later epochs
-    append batch deltas only; read_part_gate covers every next epoch."""
-    import warnings
-
-    from tower_parse_spark.operators import bloom as B
-
-    batches = [
-        [(1, T_A), (2, T_B)],
-        [(10, T_A + " indeed"), (11, T_C)],           # 10 = hist near-dup
-        [(20, T_C + " also"), (21, "totally novel words appear here")],
+    assert len(report) == 1 and report[0]["through_batch"] == 1
+    assert report[0]["index"]["n_partitions_removed"] == 2
+    assert sidecar_files() == before
+    assert sorted(d for d in os.listdir(idx) if d.startswith("batch=")) == [
+        "batch=0", "batch=2"
     ]
-    # reference: ungated run, real cap
-    u_idx, u_ver = str(tmp_path / "u_idx"), str(tmp_path / "u_ver")
-    for i, rows in enumerate(batches):
-        b = spark.createDataFrame(rows, "doc_id long, text string")
-        ND.process_epoch(b, i, u_idx, u_ver, band_gate=False)
-
-    idx, ver, ckpt = _paths(tmp_path)
-    spool = _spool(tmp_path, batches)
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64  # any real corpus sizes over this
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            q = ND.stream_minhash_dedup(
-                _stream(spark, spool), idx, ver, ckpt, band_gate=True
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        # handover warned ONCE, at the transition epoch
-        caps = [x for x in w if "MAX_GATE_BITS" in str(x.message)]
-        assert len(caps) == 1
-        # the partitioned gate is LIVE for the next epoch: meta covers,
-        # geometry matches, and the literal gate is off
-        assert ND.read_gate_bloom(spark, idx, len(batches)) is None
-        pg = ND.read_part_gate(spark, idx, len(batches))
-        assert pg is not None
-        words, n_bits, n_hashes = pg
-        assert n_bits == B.PART_GATE_BITS and n_hashes == B.PART_GATE_HASHES
-        assert words.count() > 0
-        meta = ND._read_part_meta(spark, idx)
-        assert int(meta["covered_through"]) == len(batches) - 1
-        # coverage is real: every indexed band key tests maybe-present
-        from tower_parse_spark.operators.bloom import part_gate_filter
-
-        indexed = spark.read.option("basePath", idx).parquet(idx)
-        kept = part_gate_filter(indexed, "band_key", words, n_bits, n_hashes)
-        assert kept.count() == indexed.count()  # no false negatives
-    finally:
-        B.MAX_GATE_BITS = orig
-    assert _verdict_rows(spark, ver) == _verdict_rows(spark, u_ver)
-    r10 = [r for r in _verdict_rows(spark, ver) if r[0] == 10]
-    assert r10 and r10[0][3] is True  # the near-dup still flags, gated
-
-
-def test_part_gate_rebuild_epoch_replay_keeps_coverage(spark, tmp_path):
-    """Replaying the cap-transition epoch (whose delta was rebuilt from
-    the FULL index) must re-run the full rebuild, not shrink the delta
-    to batch-only rows — otherwise pre-cap keys silently leave the
-    filter and later probes get false negatives."""
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, _ = _paths(tmp_path)
-    orig = B.MAX_GATE_BITS
-    try:
-        # epoch 0 under the REAL cap: literal gate, keys of T_A/T_B
-        b0 = spark.createDataFrame(
-            [(1, T_A), (2, T_B)], "doc_id long, text string"
-        )
-        ND.process_epoch(b0, 0, idx, ver, band_gate=True)
-        row0 = ND._read_gate_row(spark, idx, 0)
-        assert int(row0["n_bits"]) > 0  # literal gate live pre-cap
-        # cap pinned to epoch 0's geometry: epoch 1 brings MORE keys
-        # than epoch 0 held, so the resize must exceed the cap and the
-        # handover happens at epoch 1 — with epoch 0's keys PRE-dating
-        # the partitioned gate (the coverage case under test)
-        B.MAX_GATE_BITS = int(row0["n_bits"])
-        b1 = spark.createDataFrame(
-            [
-                (11, T_C),
-                (12, "completely different sentence number twelve here"),
-                (13, "another unrelated line of text for thirteen okay"),
-                (14, "fresh words keep arriving in epoch one fourteen"),
-                (15, "the last novel document of this bigger batch yes"),
-            ],
-            "doc_id long, text string",
-        )
-        ND.process_epoch(b1, 1, idx, ver, band_gate=True)
-        meta = ND._read_part_meta(spark, idx)
-        assert meta is not None and int(meta["since_batch"]) == 1
-        # REPLAY epoch 1 (crash-recovery path): coverage must survive
-        ND.process_epoch(b1, 1, idx, ver, band_gate=True)
-        words, n_bits, n_hashes = ND.read_part_gate(spark, idx, 2)
-        from tower_parse_spark.operators.bloom import part_gate_filter
-
-        indexed = spark.read.option("basePath", idx).parquet(idx)
-        kept = part_gate_filter(indexed, "band_key", words, n_bits, n_hashes)
-        assert kept.count() == indexed.count()
-        # and a near-dup of the PRE-cap epoch-0 doc still flags
-        b2 = spark.createDataFrame(
-            [(20, T_A + " again")], "doc_id long, text string"
-        )
-        ND.process_epoch(b2, 2, idx, ver, band_gate=True)
-        r20 = [r for r in _verdict_rows(spark, ver) if r[0] == 20]
-        assert r20 and r20[0][3] is True
-    finally:
-        B.MAX_GATE_BITS = orig
-
-
-def test_part_gate_declines_on_fp_saturation_and_geometry_drift(spark, tmp_path):
-    """read_part_gate must hand back None — probe runs ungated, still
-    exact — when the estimated FP is past PART_GATE_MAX_FP (gating
-    would pass nearly everything) or when the PART_GATE_* constants
-    drifted from the geometry the deltas were written at (OR-ing
-    incompatible positions would create false negatives)."""
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, _ = _paths(tmp_path)
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        b0 = spark.createDataFrame([(1, T_A)], "doc_id long, text string")
-        ND.process_epoch(b0, 0, idx, ver, band_gate=True)
-        assert ND.read_part_gate(spark, idx, 1) is not None
-        # FP saturation: claimed key count far past the fixed geometry
-        assert ND.read_part_gate(spark, idx, 1, n_keys=10**12) is None
-        # geometry drift: constants changed since the deltas were cut
-        g_orig = B.PART_GATE_BITS
-        B.PART_GATE_BITS = g_orig * 2
-        try:
-            assert ND.read_part_gate(spark, idx, 1) is None
-        finally:
-            B.PART_GATE_BITS = g_orig
-        # under-coverage: probing two epochs ahead of covered_through
-        assert ND.read_part_gate(spark, idx, 3) is None
-    finally:
-        B.MAX_GATE_BITS = orig
-
-
-def test_write_gate_bloom_recovers_missing_n_keys(spark, tmp_path):
-    """ADVICE r12 #3: a manual caller passing a cap tombstone WITHOUT
-    prev_n_keys must still take the tombstone roll-forward path —
-    n_keys recovered from the sidecar row — not fall through to the
-    full-index rebuild and re-fire the cap warning every epoch."""
-    import warnings
-
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, _ = _paths(tmp_path)
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        b0 = spark.createDataFrame(
-            [(1, T_A), (2, T_B)], "doc_id long, text string"
-        )
-        ND.process_epoch(b0, 0, idx, ver, band_gate=True)  # tombstone at 0
-        row0 = ND._read_gate_row(spark, idx, 0)
-        assert int(row0["n_bits"]) == 0
-        # manual epoch-1 gate write: tombstone tuple, NO n_keys
-        b1 = spark.createDataFrame([(10, T_C)], "doc_id long, text string")
-        from tower_parse_spark.operators.dedup import (
-            incremental_minhash_dedup_with_banded,
-        )
-
-        verdicts, banded = incremental_minhash_dedup_with_banded(
-            b1, ND._read_index(spark, idx, 1)
-        )
-        banded.write.mode("overwrite").parquet(f"{idx}/batch=1")
-        written = spark.read.parquet(f"{idx}/batch=1")
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            ND.write_gate_bloom(
-                spark, idx, 1, written,
-                (list(row0["bloom"]), 0, 0),  # tombstone, n_keys omitted
-                None,
-            )
-        assert not any("MAX_GATE_BITS" in str(x.message) for x in w)
-        row1 = ND._read_gate_row(spark, idx, 1)
-        assert row1 is not None and int(row1["n_bits"]) == 0
-        # n_keys rolled forward: previous count + this epoch's rows
-        assert int(row1["n_keys"]) == int(row0["n_keys"]) + written.count()
-    finally:
-        B.MAX_GATE_BITS = orig
-
-
-def test_compact_part_gate_preserves_probes(spark, tmp_path):
-    """Gate compaction (r13): merging the delta partitions per word
-    must leave every later probe's gate decision identical — same
-    maybe-present set over the full indexed key population — while
-    collapsing the sidecar to one partition. Replaying a merged epoch
-    afterwards stays harmless (its rewritten batch delta is a subset
-    of the merged row)."""
-    from tower_parse_spark.operators import bloom as B
-    from tower_parse_spark.operators.bloom import part_gate_filter
-
-    idx, ver, _ = _paths(tmp_path)
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        batches = [
-            [(1, T_A), (2, T_B)],
-            [(11, T_C)],
-            [(12, "a wholly different set of words for epoch two")],
-        ]
-        for i, rows in enumerate(batches):
-            b = spark.createDataFrame(rows, "doc_id long, text string")
-            ND.process_epoch(b, i, idx, ver, band_gate=True)
-        gate_before = ND.read_part_gate(spark, idx, 3)
-        assert gate_before is not None
-        indexed = spark.read.option("basePath", idx).parquet(idx).select(
-            "band_key", "doc_id"
-        )
-        probe = indexed.unionByName(
-            spark.createDataFrame(
-                [(f"novel:{i}:xx", 900 + i) for i in range(50)],
-                "band_key string, doc_id long",
-            )
-        ).localCheckpoint(eager=True)
-
-        def maybe_set(gate):
-            words, nb, nh = gate
-            return {
-                r["band_key"]
-                for r in part_gate_filter(
-                    probe, "band_key", words, nb, nh
-                ).collect()
-            }
-
-        before = maybe_set(gate_before)
-        res = ND.compact_part_gate(spark, idx, 2)
-        assert res["n_partitions_removed"] == 3
-        part_dirs = [
-            d
-            for d in os.listdir(ND._part_path(idx))
-            if d.startswith("batch=")
-        ]
-        assert part_dirs == ["batch=0"]  # one consolidated partition
-        gate_after = ND.read_part_gate(spark, idx, 3)
-        assert gate_after is not None
-        assert maybe_set(gate_after) == before
-        # every indexed key still maybe-present (no false negatives)
-        assert {r["band_key"] for r in indexed.collect()} <= before
-        # meta untouched; a replayed merged epoch keeps coverage
-        meta = ND._read_part_meta(spark, idx)
-        assert int(meta["covered_through"]) == 2
-        b1 = spark.createDataFrame(batches[1], "doc_id long, text string")
-        ND.process_epoch(b1, 1, idx, ver, band_gate=True)
-        assert maybe_set(ND.read_part_gate(spark, idx, 3)) == before
-        # and a near-dup of a PRE-compaction doc still flags
-        b3 = spark.createDataFrame(
-            [(30, T_A + " once more")], "doc_id long, text string"
-        )
-        ND.process_epoch(b3, 3, idx, ver, band_gate=True)
-        r30 = [r for r in _verdict_rows(spark, ver) if r[0] == 30]
-        assert r30 and r30[0][3] is True
-    finally:
-        B.MAX_GATE_BITS = orig
-
-
-def test_compact_part_gate_noop_below_since(spark, tmp_path):
-    """ADVICE r13: through_batch < since_batch is an explicit no-op —
-    no merge, no deletes, no rename (Hadoop rename into an existing
-    batch=since dir would nest the staging dir INSIDE it) — and the
-    gate keeps covering."""
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, _ = _paths(tmp_path)
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        for i, rows in enumerate([[(1, T_A)], [(2, T_B)]]):
-            b = spark.createDataFrame(rows, "doc_id long, text string")
-            ND.process_epoch(b, i, idx, ver, band_gate=True)
-        # manufacture since_batch=1 by forcing the rebuild path at 1
-        ND._write_part_meta(spark, idx, since_batch=1, covered_through=1)
-        before = sorted(
-            d for d in os.listdir(ND._part_path(idx)) if d.startswith("batch=")
-        )
-        res = ND.compact_part_gate(spark, idx, through_batch=0)
-        assert res == {"n_words": 0, "n_partitions_removed": 0}
-        after = sorted(
-            d for d in os.listdir(ND._part_path(idx)) if d.startswith("batch=")
-        )
-        assert after == before and "_compact_staging" not in os.listdir(
-            ND._part_path(idx)
-        )
-        meta = ND._read_part_meta(spark, idx)
-        assert (int(meta["since_batch"]), int(meta["covered_through"])) == (1, 1)
-    finally:
-        B.MAX_GATE_BITS = orig
-
-
-def test_compact_part_gate_crash_degrades_to_gate_off(spark, tmp_path, monkeypatch):
-    """ADVICE r13 (medium): a crash inside compaction's destructive
-    window must read as GATE OFF (ungated probes — exact, unpruned),
-    never as a live meta row vouching for deleted delta rows (silent
-    false negatives). The meta row is deleted before the first
-    destructive step and rewritten only after the rename; simulate the
-    worst crash point by failing the final meta rewrite, then verify
-    the next epoch's rebuild path restores coverage."""
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, _ = _paths(tmp_path)
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        batches = [[(1, T_A)], [(2, T_B)], [(3, T_C)]]
-        for i, rows in enumerate(batches):
-            b = spark.createDataFrame(rows, "doc_id long, text string")
-            ND.process_epoch(b, i, idx, ver, band_gate=True)
-        assert ND.read_part_gate(spark, idx, 3) is not None
-
-        real_writer = ND._write_part_meta
-
-        def crash_writer(*a, **k):
-            raise RuntimeError("simulated crash before meta rewrite")
-
-        monkeypatch.setattr(ND, "_write_part_meta", crash_writer)
-        try:
-            ND.compact_part_gate(spark, idx, 2)
-        except RuntimeError:
-            pass
-        monkeypatch.setattr(ND, "_write_part_meta", real_writer)
-
-        # the window state: merged partition in place, meta GONE
-        assert ND._read_part_meta(spark, idx) is None
-        assert ND.read_part_gate(spark, idx, 3) is None  # gate off, not wrong
-        # the loop keeps running correctly ungated, and the rebuild
-        # path restores a covering gate for later epochs
-        b3 = spark.createDataFrame(
-            [(30, T_A + " once more")], "doc_id long, text string"
-        )
-        ND.process_epoch(b3, 3, idx, ver, band_gate=True)
-        r30 = [r for r in _verdict_rows(spark, ver) if r[0] == 30]
-        assert r30 and r30[0][3] is True  # still exact during gate-off
-        meta = ND._read_part_meta(spark, idx)
-        assert meta is not None and int(meta["covered_through"]) == 3
-        assert ND.read_part_gate(spark, idx, 4) is not None
-    finally:
-        B.MAX_GATE_BITS = orig
-
-
-def test_compact_part_gate_preserves_recorded_geometry(spark, tmp_path):
-    """The post-rename meta rewrite must carry the sidecar's RECORDED
-    geometry, not the current constants: rewriting a drifted sidecar's
-    meta with new constants would vouch old-geometry rows past
-    read_part_gate's drift check (false negatives)."""
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, _ = _paths(tmp_path)
-    orig_cap, orig_bits = B.MAX_GATE_BITS, B.PART_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        for i, rows in enumerate([[(1, T_A)], [(2, T_B)], [(3, T_C)]]):
-            b = spark.createDataFrame(rows, "doc_id long, text string")
-            ND.process_epoch(b, i, idx, ver, band_gate=True)
-        # constants drift AFTER the sidecar was written
-        B.PART_GATE_BITS = orig_bits * 2
-        assert ND.read_part_gate(spark, idx, 3) is None  # drift: gate off
-        ND.compact_part_gate(spark, idx, 2)
-        meta = ND._read_part_meta(spark, idx)
-        assert int(meta["n_bits"]) == orig_bits  # recorded, not current
-        # reverting the constants revalidates the compacted sidecar
-        B.PART_GATE_BITS = orig_bits
-        assert ND.read_part_gate(spark, idx, 3) is not None
-    finally:
-        B.MAX_GATE_BITS, B.PART_GATE_BITS = orig_cap, orig_bits
-
-
-def test_part_gate_floor_pinned_to_measured_crossover():
-    """The shipped floor is a MEASURED constant, not a guess: 10M keys
-    is a quiet-machine loss (0.89x), 15M a quiet-machine win (1.08x /
-    1.24x, SCALE.md r15) — moving it again requires a fresh A/B row
-    (the conftest snapshot keeps per-test patches from leaking here)."""
-    from tower_parse_spark.operators import bloom as B
-
-    assert B.PART_GATE_MIN_KEYS == 15_000_000
-
-
-def test_part_gate_engagement_floor(spark, tmp_path):
-    """r14 (VERDICT r13 #3a): below PART_GATE_MIN_KEYS the tombstoned
-    probe runs UNGATED (the gate's fixed join overhead beats the
-    pruning under the measured crossover) while the sidecar keeps
-    accumulating per-epoch deltas — so the epoch that crosses the floor
-    engages an already-covering gate with NO rebuild, and verdicts are
-    exact throughout."""
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, _ = _paths(tmp_path)
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 1_000  # floor far above this toy corpus
-    try:
-        batches = [[(1, T_A)], [(2, T_B)], [(30, T_A + " once more")]]
-        for i, rows in enumerate(batches):
-            b = spark.createDataFrame(rows, "doc_id long, text string")
-            ND.process_epoch(b, i, idx, ver, band_gate=True)
-        # verdicts stayed exact through the ungated phase
-        r30 = [r for r in _verdict_rows(spark, ver) if r[0] == 30]
-        assert r30 and r30[0][3] is True
-        # the probe path (n_keys from the tombstone) refused the gate...
-        row = ND._read_gate_row(spark, idx, 2)
-        n_keys = int(row["n_keys"])
-        assert 0 < n_keys < 1_000
-        assert ND.read_part_gate(spark, idx, 3, n_keys=n_keys) is None
-        # ...but the sidecar kept covering: every epoch wrote its delta
-        part_dirs = sorted(
-            d for d in os.listdir(ND._part_path(idx)) if d.startswith("batch=")
-        )
-        assert part_dirs == ["batch=0", "batch=1", "batch=2"]
-        meta = ND._read_part_meta(spark, idx)
-        assert int(meta["covered_through"]) == 2
-        # crossing the floor engages WITHOUT any rebuild or new write
-        B.PART_GATE_MIN_KEYS = n_keys
-        gate = ND.read_part_gate(spark, idx, 3, n_keys=n_keys)
-        assert gate is not None
-        # and the engaged gate has no false negatives over the index
-        from tower_parse_spark.operators.bloom import part_gate_filter
-
-        indexed = spark.read.option("basePath", idx).parquet(idx).select(
-            "band_key"
-        )
-        words, nb, nh = gate
-        passed = {
-            r["band_key"]
-            for r in part_gate_filter(indexed, "band_key", words, nb, nh).collect()
-        }
-        assert {r["band_key"] for r in indexed.collect()} <= passed
-    finally:
-        B.MAX_GATE_BITS = orig
-
-
-def test_rebit_part_gate_migrates_geometry(spark, tmp_path):
-    """r14 (VERDICT r13 #3b): raising PART_GATE_BITS geometry-drifts
-    the live sidecar (gate correctly disables); rebit_part_gate is the
-    offline handover — rebuild from the full index at the new geometry,
-    gate comes back ACTIVE and verdict-identical (no false negatives
-    over the indexed keys, near-dups still flag, replays stay safe)."""
-    from tower_parse_spark.operators import bloom as B
-    from tower_parse_spark.operators.bloom import part_gate_filter
-
-    idx, ver, _ = _paths(tmp_path)
-    orig_cap, orig_bits = B.MAX_GATE_BITS, B.PART_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        batches = [[(1, T_A)], [(2, T_B)], [(3, T_C)]]
-        for i, rows in enumerate(batches):
-            b = spark.createDataFrame(rows, "doc_id long, text string")
-            ND.process_epoch(b, i, idx, ver, band_gate=True)
-        # deployment raises the geometry -> drift -> gate off
-        B.PART_GATE_BITS = orig_bits * 2
-        assert ND.read_part_gate(spark, idx, 3) is None
-        report = ND.rebit_part_gate(spark, idx)
-        assert report["n_bits"] == orig_bits * 2
-        assert report["since_batch"] == 2
-        # active at the new geometry, one consolidated partition
-        gate = ND.read_part_gate(spark, idx, 3)
-        assert gate is not None and gate[1] == orig_bits * 2
-        part_dirs = sorted(
-            d for d in os.listdir(ND._part_path(idx)) if d.startswith("batch=")
-        )
-        assert part_dirs == ["batch=2"]
-        # no false negatives over every indexed key
-        indexed = spark.read.option("basePath", idx).parquet(idx).select(
-            "band_key", "doc_id"
-        )
-        words, nb, nh = gate
-        passed = {
-            r["band_key"]
-            for r in part_gate_filter(
-                indexed, "band_key", words, nb, nh
-            ).collect()
-        }
-        assert {r["band_key"] for r in indexed.collect()} <= passed
-        # the loop continues at the new geometry: near-dup still flags,
-        # novel doc still passes
-        b3 = spark.createDataFrame(
-            [(30, T_A + " once more"), (31, "wholly novel words here yes")],
-            "doc_id long, text string",
-        )
-        ND.process_epoch(b3, 3, idx, ver, band_gate=True)
-        rows = {r[0]: r for r in _verdict_rows(spark, ver)}
-        assert rows[30][3] is True and rows[31][3] is False
-        # empty/missing index: explicit no-op
-        empty = str(tmp_path / "empty_idx")
-        assert ND.rebit_part_gate(spark, empty)["since_batch"] is None
-    finally:
-        B.MAX_GATE_BITS, B.PART_GATE_BITS = orig_cap, orig_bits
 
 
 def test_auto_compaction_cadence_bounded_and_verdict_identical(spark, tmp_path):
-    """r15 (VERDICT r14 #5): compact_every=K folds the index, the
-    partitioned-gate deltas and the literal-gate history every K epochs
-    from inside the epoch body — after 3K epochs the partition counts
-    are bounded (~K+1) instead of one-per-epoch, every verdict is
-    identical to an uncompacted run, the gate stays ACTIVE, and a
-    replay of the compaction epoch itself is idempotent."""
-    from tower_parse_spark.operators import bloom as B
+    """r15 (VERDICT r14 #5): compact_every=K folds the index every K
+    epochs from inside the epoch body — after 3K epochs the partition
+    count is bounded (~K+1) instead of one-per-epoch, every verdict is
+    identical to an uncompacted run, and a replay of the compaction
+    epoch itself is idempotent."""
+    k = 3
+    epochs = []  # 3K epochs: one novel doc each + one exact dup of T_A
+    for i in range(3 * k):
+        novel = " ".join(f"w{i}x{j}" for j in range(10))
+        rows = [(10 * i + 1, novel)]
+        rows.append((10 * i + 2, T_A) if i else (2, T_A))
+        epochs.append(spark.createDataFrame(rows, "doc_id long, text string"))
 
-    orig_cap = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        k = 3
-        epochs = []  # 3K epochs: one novel doc each + one exact dup of T_A
-        for i in range(3 * k):
-            novel = " ".join(f"w{i}x{j}" for j in range(10))
-            rows = [(10 * i + 1, novel)]
-            rows.append((10 * i + 2, T_A) if i else (2, T_A))
-            epochs.append(
-                spark.createDataFrame(rows, "doc_id long, text string")
-            )
+    def run(idx, ver, compact_every):
+        for i, batch in enumerate(epochs):
+            ND.process_epoch(batch, i, idx, ver, compact_every=compact_every)
 
-        def run(idx, ver, compact_every):
-            for i, batch in enumerate(epochs):
-                ND.process_epoch(
-                    batch, i, idx, ver, band_gate=True,
-                    compact_every=compact_every,
-                )
+    idx_a, ver_a = str(tmp_path / "idxA"), str(tmp_path / "verA")
+    idx_b, ver_b = str(tmp_path / "idxB"), str(tmp_path / "verB")
+    run(idx_a, ver_a, None)
+    run(idx_b, ver_b, k)
 
-        idx_a, ver_a = str(tmp_path / "idxA"), str(tmp_path / "verA")
-        idx_b, ver_b = str(tmp_path / "idxB"), str(tmp_path / "verB")
-        run(idx_a, ver_a, None)
-        run(idx_b, ver_b, k)
+    def verdicts(ver):
+        return {
+            r.doc_id: (r.is_dup, r.in_batch_dup, r.n_hist_matches,
+                       r.max_est_jaccard, r.batch)
+            for r in spark.read.option("basePath", ver).parquet(ver).collect()
+        }
 
-        def verdicts(ver):
-            return {
-                r.doc_id: (r.is_dup, r.in_batch_dup, r.n_hist_matches,
-                           r.max_est_jaccard, r.batch)
-                for r in spark.read.option("basePath", ver)
-                .parquet(ver).collect()
-            }
+    def index_rows(idx):
+        return {
+            (r.band_key, r.doc_id)
+            for r in spark.read.option("basePath", idx)
+            .parquet(idx).select("band_key", "doc_id").collect()
+        }
 
-        def index_rows(idx):
-            return {
-                (r.band_key, r.doc_id)
-                for r in spark.read.option("basePath", idx)
-                .parquet(idx).select("band_key", "doc_id").collect()
-            }
+    def batch_dirs(path):
+        return sorted(d for d in os.listdir(path) if d.startswith("batch="))
 
-        def batch_dirs(path):
-            if not os.path.isdir(path):
-                return []
-            return sorted(
-                d for d in os.listdir(path) if d.startswith("batch=")
-            )
-
-        assert verdicts(ver_b) == verdicts(ver_a)
-        assert index_rows(idx_b) == index_rows(idx_a)
-        # compactions fired at epochs 3 and 6 (through 2 and 5): the
-        # cadenced run is bounded at k+1 dirs, the plain run grew 1/epoch
-        assert len(batch_dirs(idx_a)) == 3 * k
-        assert batch_dirs(idx_b) == ["batch=0", "batch=6", "batch=7",
-                                     "batch=8"]
-        assert len(batch_dirs(ND._part_path(idx_b))) <= k + 1
-        assert len(batch_dirs(ND._part_path(idx_a))) == 3 * k
-        # literal-gate history pruned to rows >= 5; row 8 covers epoch 9
-        assert batch_dirs(ND._bloom_path(idx_b)) == [
-            "batch=5", "batch=6", "batch=7", "batch=8"
-        ]
-        assert ND.read_part_gate(spark, idx_b, 3 * k) is not None
-        # replay the compaction epoch (6): overwrites its own partitions,
-        # re-runs the (idempotent) compaction, changes nothing
-        ND.process_epoch(
-            epochs[6], 6, idx_b, ver_b, band_gate=True, compact_every=k
-        )
-        assert verdicts(ver_b) == verdicts(ver_a)
-        assert index_rows(idx_b) == index_rows(idx_a)
-        assert ND.read_part_gate(spark, idx_b, 3 * k) is not None
-    finally:
-        B.MAX_GATE_BITS = orig_cap
+    assert verdicts(ver_b) == verdicts(ver_a)
+    assert index_rows(idx_b) == index_rows(idx_a)
+    # compactions fired at epochs 3 and 6 (through 2 and 5): the
+    # cadenced run is bounded at k+1 dirs, the plain run grew 1/epoch
+    assert len(batch_dirs(idx_a)) == 3 * k
+    assert batch_dirs(idx_b) == ["batch=0", "batch=6", "batch=7", "batch=8"]
+    # replay the compaction epoch (6): overwrites its own partitions,
+    # re-runs the (idempotent) compaction, changes nothing
+    ND.process_epoch(epochs[6], 6, idx_b, ver_b, compact_every=k)
+    assert verdicts(ver_b) == verdicts(ver_a)
+    assert index_rows(idx_b) == index_rows(idx_a)
+    assert batch_dirs(idx_b) == ["batch=0", "batch=6", "batch=7", "batch=8"]
 
 
 def test_auto_compaction_through_stream(spark, tmp_path):
@@ -1102,41 +420,6 @@ def test_auto_compaction_through_stream(spark, tmp_path):
     assert sorted(
         r.doc_id for r in idx_df.select("doc_id").distinct().collect()
     ) == [1, 2, 20]
-
-
-def test_rebit_cli_end_to_end(spark, tmp_path, capsys):
-    """--compact-index --rebit BITS: index compaction runs, the sidecar
-    is rebuilt at BITS (replacing, not merging, the old-geometry
-    deltas), and the report line carries the new geometry."""
-    import json as _json
-
-    from tower_parse_spark.__main__ import run_compact_index
-    from tower_parse_spark.operators import bloom as B
-
-    idx, ver, _ = _paths(tmp_path)
-    orig_cap, orig_bits = B.MAX_GATE_BITS, B.PART_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    B.PART_GATE_MIN_KEYS = 0  # toy scale: engagement floor off
-    try:
-        for i, t in enumerate([T_A, T_B, T_C]):
-            b = spark.createDataFrame([(i + 1, t)], "doc_id long, text string")
-            ND.process_epoch(b, i, idx, ver, band_gate=True)
-        # the documented workflow: raise the deployed constant FIRST,
-        # then migrate — a --rebit that disagrees with the constants is
-        # rejected (ADVICE r14: read_part_gate could never engage it)
-        with pytest.raises(ValueError, match="deployed bloom.PART_GATE"):
-            run_compact_index(spark, idx, None, rebit=orig_bits * 2)
-        capsys.readouterr()  # drop the pre-failure compaction report
-        B.PART_GATE_BITS = orig_bits * 2
-        assert run_compact_index(spark, idx, None, rebit=orig_bits * 2) == 0
-        out = [
-            _json.loads(line)
-            for line in capsys.readouterr().out.strip().splitlines()
-        ]
-        assert out[1]["part_gate_rebit"]["n_bits"] == orig_bits * 2
-        assert ND.read_part_gate(spark, idx, 3) is not None
-    finally:
-        B.MAX_GATE_BITS, B.PART_GATE_BITS = orig_cap, orig_bits
 
 
 def test_stream_start_validates_index_family_once(spark, tmp_path):

@@ -228,11 +228,8 @@ def audit_streaming(spark) -> tuple[list, list]:
     captured at the epoch's own materialization sites and scanned with
     the same rules as the batch registry:
 
-    - ``neardup_epoch``: two process_epoch calls, band_gate on — the
-      second probes through the live literal gate;
-    - ``neardup_epoch_part_gated``: the same loop with MAX_GATE_BITS
-      forced tiny, so the handover epoch and a PARTITIONED-gate probe
-      epoch both execute (the r13 plan shape);
+    - ``neardup_epoch``: two process_epoch calls, the second probing a
+      live index;
     - ``phash_epoch``: two process_phash_epoch calls (r15 — the
       image/audio near-dup twin), the second probing a live banded
       index;
@@ -247,7 +244,6 @@ def audit_streaming(spark) -> tuple[list, list]:
 
     from pyspark.sql import functions as F
 
-    from tower_parse_spark.operators import bloom as B
     from tower_parse_spark.operators.classifier import train_quality_nb
     from tower_parse_spark.streaming import curation as CU
     from tower_parse_spark.streaming import neardup as ND
@@ -267,38 +263,15 @@ def audit_streaming(spark) -> tuple[list, list]:
             "doc_id long, text string",
         )
 
-    # --- near-dup epochs, literal gate ---
+    # --- near-dup epochs (the second probes a live index) ---
     with _EpochPlanCapture() as cap:
         ND.process_epoch(
-            batch(docs, [1, 2]), 0, f"{work}/n_idx", f"{work}/n_ver",
-            band_gate=True,
+            batch(docs, [1, 2]), 0, f"{work}/n_idx", f"{work}/n_ver"
         )
         ND.process_epoch(
-            batch(docs, [10, 11]), 1, f"{work}/n_idx", f"{work}/n_ver",
-            band_gate=True,
+            batch(docs, [10, 11]), 1, f"{work}/n_idx", f"{work}/n_ver"
         )
     rows.append(_scan_plans("neardup_epoch", cap.plans, bad))
-
-    # --- near-dup epochs, partitioned gate (forced over the cap) ---
-    orig = B.MAX_GATE_BITS
-    B.MAX_GATE_BITS = 64
-    try:
-        import warnings
-
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore")  # the expected handover warning
-            with _EpochPlanCapture() as cap:
-                ND.process_epoch(
-                    batch(docs, [1, 2]), 0, f"{work}/p_idx", f"{work}/p_ver",
-                    band_gate=True,
-                )
-                ND.process_epoch(
-                    batch(docs, [10, 11]), 1, f"{work}/p_idx", f"{work}/p_ver",
-                    band_gate=True,
-                )
-    finally:
-        B.MAX_GATE_BITS = orig
-    rows.append(_scan_plans("neardup_epoch_part_gated", cap.plans, bad))
 
     # --- perceptual-hash near-dup epochs (r15: the image/audio twin;
     # two epochs so the second probes a live banded index) ---

@@ -20,14 +20,7 @@ consolidated index keeps answering probes at the same cost.
 
 Prints one JSON line; numbers land in SCALE.md.
 
-``--gate`` (r10, VERDICT r9 Next #5) runs the epochs with the band-key
-Bloom gate on and records, per epoch, the gate's skip rate: the
-fraction of the batch's banded rows pruned before the history probe
-and the fraction of documents whose EVERY band missed (those skip the
-probe entirely; on this smoke's 80%-novel stream that is the common
-case the gate exists for).
-
-Usage: python tools/stream_neardup_smoke.py [epochs] [batch_size] [--gate]
+Usage: python tools/stream_neardup_smoke.py [epochs] [batch_size]
 """
 
 from __future__ import annotations
@@ -75,19 +68,13 @@ def epoch_docs(spark, epoch: int, batch: int):
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    gate = "--gate" in sys.argv
+    args = sys.argv[1:]
     epochs = int(args[0]) if args else 10
     batch = int(args[1]) if len(args) > 1 else 50_000
     spark = get_spark("stream_neardup_smoke")
     tmp = tempfile.mkdtemp(prefix="ndsmoke_")
     idx, ver = f"{tmp}/idx", f"{tmp}/ver"
-    out = {
-        "epochs": epochs,
-        "batch_size": batch,
-        "band_gate": gate,
-        "per_epoch": [],
-    }
+    out = {"epochs": epochs, "batch_size": batch, "per_epoch": []}
     try:
         for k in range(epochs):
             docs = epoch_docs(spark, k, batch).localCheckpoint(eager=True)
@@ -95,7 +82,7 @@ def main() -> int:
                 ND._read_index(spark, idx, before_batch=k).count()
             )
             t0 = time.time()
-            ND.process_epoch(docs, k, idx, ver, band_gate=gate)
+            ND.process_epoch(docs, k, idx, ver)
             secs = round(time.time() - t0, 2)
             verd = spark.read.parquet(f"{ver}/batch={k}")
             survivors = verd.filter(
@@ -109,44 +96,6 @@ def main() -> int:
                 "survivors": survivors,
                 "dups": dups,
             }
-            if gate and k > 0:
-                # the gate's skip rate, measured against the sidecar the
-                # epoch actually probed with (row k-1): banded rows
-                # pruned + docs whose EVERY band missed (full skip)
-                from tower_parse_spark.operators.bloom import might_contain
-                from tower_parse_spark.operators.dedup import (
-                    banded_signatures,
-                )
-
-                g = ND.read_gate_bloom(spark, idx, k)
-                if g is not None:
-                    import json as _json
-
-                    gwords, n_bits, n_hashes = g
-                    gate_lit = F.from_json(
-                        F.lit(_json.dumps(list(gwords))), "array<long>"
-                    )
-                    banded = banded_signatures(docs)
-                    tested = banded.select(
-                        "doc_id",
-                        might_contain(
-                            F.col("band_key"), gate_lit, n_bits, n_hashes
-                        ).alias("_hit"),
-                    )
-                    total = tested.count()
-                    kept = tested.filter(F.col("_hit")).count()
-                    full_skip = (
-                        tested.groupBy("doc_id")
-                        .agg(F.max(F.col("_hit").cast("int")).alias("any"))
-                        .filter("any = 0")
-                        .count()
-                    )
-                    rec["gate_rows_pruned_pct"] = round(
-                        100.0 * (total - kept) / total, 1
-                    )
-                    rec["gate_docs_fully_skipped_pct"] = round(
-                        100.0 * full_skip / batch, 1
-                    )
             out["per_epoch"].append(rec)
             # release the epoch's localCheckpoint blocks (the bench.py
             # lesson): without this, accumulated blocks degrade later

@@ -67,10 +67,9 @@ def build_parser() -> argparse.ArgumentParser:
     mode.add_argument(
         "--compact-index",
         metavar="DIR",
-        help="compact a near-dup signature index (merge batch "
-        "partitions and the partitioned-gate sidecar); run with the "
-        "stream STOPPED or --through-batch strictly below the next "
-        "epoch id",
+        help="compact a near-dup signature index (merge its batch "
+        "partitions); run with the stream STOPPED or --through-batch "
+        "strictly below the next epoch id",
     )
     p.add_argument(
         "--through-batch",
@@ -83,18 +82,6 @@ def build_parser() -> argparse.ArgumentParser:
         "when the checkpoint is known committed through max)",
     )
     p.add_argument(
-        "--rebit",
-        type=int,
-        default=None,
-        metavar="BITS",
-        help="with --compact-index: REBUILD the partitioned-gate "
-        "sidecar from the full index at this geometry (bits, multiple "
-        "of 64 — e.g. 17179869184 for 2^34) instead of merging the "
-        "old-geometry deltas; the offline migration for a deployment "
-        "raising bloom.PART_GATE_BITS near FP saturation (the running "
-        "stream must be configured with the same raised constant)",
-    )
-    p.add_argument(
         "--model",
         help="quality-model artifact path (save_quality_model) for --curate",
     )
@@ -103,10 +90,10 @@ def build_parser() -> argparse.ArgumentParser:
         type=int,
         default=None,
         metavar="K",
-        help="with --curate: auto-compact the near-dup index and gate "
-        "sidecars every K epochs from inside the stream (bounded "
-        "partition counts without the manual --compact-index CLI; "
-        "safety argument in neardup.process_epoch's docstring)",
+        help="with --curate: auto-compact the near-dup index every K "
+        "epochs from inside the stream (bounded partition counts "
+        "without the manual --compact-index CLI; safety argument in "
+        "neardup.process_epoch's docstring)",
     )
     p.add_argument(
         "--lm-model",
@@ -223,15 +210,9 @@ def start_curate(
     )
 
 
-def run_compact_index(
-    spark,
-    index_path: str,
-    through_batch: int | None,
-    rebit: int | None = None,
-) -> int:
+def run_compact_index(spark, index_path: str, through_batch: int | None) -> int:
     """The --compact-index maintenance mode: fold the signature index's
-    ``batch=N`` partitions AND its partitioned-gate ``_bloom_part``
-    sidecar (when one exists) through *through_batch* — default the
+    ``batch=N`` partitions through *through_batch* — default the
     highest batch present MINUS ONE (ADVICE r13): a non-gracefully
     stopped stream replays its last epoch on restart, and that
     replayed probe at N=max must not read its own rows folded into
@@ -239,7 +220,7 @@ def run_compact_index(
     only epochs that can no longer replay are compacted by default.
     Pass --through-batch explicitly (e.g. =max) only when the
     checkpoint is known committed through max. Prints one JSON line
-    per compaction so operators can log the row/partition deltas."""
+    so operators can log the row/partition deltas."""
     import json
 
     from pyspark.sql import functions as F
@@ -261,19 +242,6 @@ def run_compact_index(
         through_batch = max(max_batch - 1, 0)
     idx = ND.compact_minhash_index(spark, index_path, through_batch)
     print(json.dumps({"index": idx, "through_batch": through_batch}))
-    if rebit is not None:
-        # geometry migration replaces the sidecar wholesale — merging
-        # the old-geometry deltas first would be wasted work
-        gate = ND.rebit_part_gate(spark, index_path, n_bits=rebit)
-        print(json.dumps({"part_gate_rebit": gate}))
-    else:
-        gate = ND.compact_part_gate(spark, index_path, through_batch)
-        print(json.dumps({"part_gate": gate, "through_batch": through_batch}))
-    # literal band-gate history: each epoch's cumulative one-row bloom
-    # (~8 MB at the cap) below through_batch is dead weight — a replayed
-    # epoch at max reads row max-1 == through_batch, which survives
-    pruned = ND.prune_gate_history(spark, index_path, through_batch)
-    print(json.dumps({"gate_rows_pruned": pruned}))
     return 0
 
 
@@ -310,9 +278,7 @@ def main(argv: list[str] | None = None) -> int:
             df.show(args.limit, truncate=False)
         return 0
     if args.compact_index is not None:
-        return run_compact_index(
-            spark, args.compact_index, args.through_batch, rebit=args.rebit
-        )
+        return run_compact_index(spark, args.compact_index, args.through_batch)
     if args.phash_dedup is not None:
         q = start_phash_dedup(
             spark, args.phash_dedup, args.out,

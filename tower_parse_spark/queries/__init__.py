@@ -51,56 +51,56 @@ class Query:
 # deferred query's normalized optimized-plan digest against the
 # committed PLAN_DIGESTS.json and goes red on drift.
 _DEFER_TO_TAIL = [
-    'q5_local_supplier',
-    'running_revenue_by_nation',
-    'customers_without_urgent_orders',
-    'part_supplier_overlap',
-    'orders_with_returns',
-    'customer_order_distribution',
-    'part_string_functions',
-    'orders_date_functions',
-    'lineitem_math_functions',
-    'min_cost_parts',
-    'top_return_customers',
-    'promo_revenue_pct',
-    'disjunctive_filter_revenue',
-    'revenue_cube',
-    'part_measures_unpivot',
-    'nation_volume_shipping',
-    'market_share_by_year',
-    'top_revenue_supplier',
-    'big_basket_orders',
-    'q6_forecast_revenue',
-    'q9_product_profit',
-    'q17_small_quantity_revenue',
-    'ingest_pack_scalable',
-    'ingest_echo',
-    'dedup_passages',
-    'boilerplate_removal',
-    'incremental_exact_dedup',
-    'incremental_minhash_dedup',
-    'dedup_simhash',
-    'dedup_ngram_jaccard',
-    'ann_ivfpq_topk',
-    'embedding_cluster_stats',
-    'text_langid',
-    'token_count_bpe',
-    'text_fingerprint',
-    'multimodal_pipeline',
-    'decontaminate_fuzzy',
-    'split_leakage_check',
-    'text_pii_redact',
-    'sequence_packing',
-    'streaming_pack_carry',
-    'streaming_late_data',
-    'events_time_rollup',
-    'events_sliding_window',
-    'events_sessionize',
-    'events_asof_order',
-    'events_order_range_join',
-    'events_json_props',
-    'events_value_distribution',
-    'quality_classifier',
+    'q1_pricing_summary',
+    'q3_shipping_priority',
+    'top_customers_per_nation',
+    'revenue_rollup',
+    'order_priority_pivot',
+    'wealthy_inactive_customers',
+    'segment_set_ops',
+    'customer_order_arrays',
+    'priority_ship_stats',
+    'order_gaps_quartiles',
+    'q11_important_parts',
+    'q16_supplier_counts',
+    'q21_blame_suppliers',
+    'ingest_extract_probe',
+    'ingest_sentinel_stats',
+    'ingest_pack_assign',
+    'ingest_multiformat',
+    'ingest_malformed_routing',
+    'dedup_exact',
+    'dedup_minhash_lsh',
+    'source_overlap_minhash',
+    'dedup_embedding_cosine',
+    'dedup_cluster_resolution',
+    'ann_cosine_topk',
+    'ann_lsh_topk',
+    'ann_ivf_topk',
+    'text_quality',
+    'text_token_stats',
+    'multimodal_decode',
+    'training_data_pipeline',
+    'decontaminate_ngram',
+    'train_val_split',
+    'domain_mix_sample',
+    'doc_chunking',
+    'text_repetition',
+    'text_tfidf_topterms',
+    'quality_filter_funnel',
+    'streaming_generator',
+    'streaming_minhash_dedup',
+    'events_tumbling_window',
+    'events_session_window',
+    'events_map_functions',
+    'domain_curation',
+    'semantic_dedup',
+    'multimodal_near_dup',
+    'gopher_quality',
+    'line_cleaning',
+    'domain_reweight',
+    'decontaminate_semantic',
+    'perplexity_filter',
 ]
 
 

@@ -24,11 +24,7 @@ that shape, one ``foreachBatch`` epoch at a time:
    index exactly as streaming/neardup.py::process_epoch does
    (partitions ``batch < N`` only, batch side broadcast, one
    shingling per document per lifetime), and new survivors' signatures
-   are indexed. The curation pipeline runs the probe behind the
-   auto-sized band-key Bloom gate (r10, ``band_gate=True``): quality
-   survivors on a live ingest are mostly NOVEL, and a novel document's
-   bands all miss the filter, skipping the history probe — verdict-
-   identical by the Bloom no-false-negative property.
+   are indexed.
 3. **Accept sink** — documents that pass both gates land under
    ``accepted/batch=N``.
 
@@ -74,7 +70,6 @@ def curate_epoch(
     hash_fn: str = "fast",
     lm: BigramLM | None = None,
     lm_reject_ce: float = CE_MIDDLE,
-    band_gate: bool = True,
     compact_every: int | None = None,
     validate_family: bool = True,
 ) -> None:
@@ -138,11 +133,7 @@ def curate_epoch(
     quarantined.write.mode("overwrite").parquet(
         f"{rejected_path}/batch={batch_id}"
     )
-    # the near-dup loop handles its own verdict/index batch=N overwrite;
-    # the curation pipeline runs it Bloom-gated by default (r10, VERDICT
-    # r9 Next #5): quality survivors are mostly NOVEL documents — the
-    # common case skips the history probe on the auto-sized band-key
-    # filter, verdict-identical by the no-false-negative property
+    # the near-dup loop handles its own verdict/index batch=N overwrite
     process_epoch(
         keepers,
         batch_id,
@@ -152,7 +143,6 @@ def curate_epoch(
         text_col=text_col,
         threshold=threshold,
         hash_fn=hash_fn,
-        band_gate=band_gate,
         compact_every=compact_every,
         validate_family=validate_family,
     )
@@ -180,7 +170,6 @@ def stream_curate(
     hash_fn: str = "fast",
     lm: BigramLM | None = None,
     lm_reject_ce: float = CE_MIDDLE,
-    band_gate: bool = True,
     compact_every: int | None = None,
 ):
     """Start the streaming curation query over *docs_stream* (columns
@@ -232,7 +221,6 @@ def stream_curate(
             hash_fn=hash_fn,
             lm=pinned_lm,
             lm_reject_ce=lm_reject_ce,
-            band_gate=band_gate,
             compact_every=compact_every,
             validate_family=False,
         )
